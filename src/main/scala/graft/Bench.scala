@@ -107,19 +107,33 @@ object Bench {
     } catch { case _: Throwable => }
     // optional focus filter for local iteration (unset → full suite)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    // session artifacts each query hit or built, so a shared build's
+    // cost is attributed to the query that paid it. Build seconds include
+    // nested builds; a frame persists lazily, so its seconds cover
+    // planning and eager steps (checkpoints, counts) and its first
+    // materialization lands in the building query's own time
+    val artifacts = scala.collection.mutable.LinkedHashMap.empty[String, Seq[graft.ops.Artifacts.Event]]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
       // label every job with its query (guide §1.5) so event logs / the
       // UI attribute time per query — metadata only, no runtime effect
       spark.sparkContext.setJobDescription(s"bench:$name")
+      val events = Seq.newBuilder[graft.ops.Artifacts.Event]
       val t0 = System.nanoTime()
       val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        try {
+          graft.ops.Artifacts.observe(e => events.synchronized { events += e }) {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          }
+          true
+        }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
         finally spark.sparkContext.setJobDescription(null)
+      val seen = events.result()
+      if (seen.nonEmpty) artifacts(name) = seen
       // -1 marks a failed query in the JSON so a regression can't hide
       // inside a smaller (passing) total
       name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
@@ -135,11 +149,18 @@ object Bench {
     // would push the driver-facing JSON out of the 2000-char output tail.
     val detail = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val artifactDetail = artifacts.map { case (q, es) =>
+      val built = es.filter(_.built).map(e =>
+        s"""{"artifact":${graft.core.Json.quote(e.kind)},"secs":${e.secs}}""")
+      s"""${graft.core.Json.quote(q)}:{"hits":${es.count(!_.built)},""" +
+        s""""misses":${built.size},"built":${built.mkString("[", ",", "]")}}"""
+    }.mkString("{", ",", "}")
     try {
       val out = java.nio.file.Paths.get("out")
       java.nio.file.Files.createDirectories(out)
       java.nio.file.Files.writeString(out.resolve("bench_detail.json"),
-        s"""{"total":$total,"n_queries":${results.size},"queries":$detail,"sf":"$sfDir"}""")
+        s"""{"total":$total,"n_queries":${results.size},"queries":$detail,""" +
+          s""""artifacts":$artifactDetail,"sf":"$sfDir"}""")
     } catch { case _: Throwable => }
     // Driver-facing line: MUST fit (with sbt's trailing "[success] ..."
     // line, ~80 chars) inside the driver's 2000-char output tail, or the

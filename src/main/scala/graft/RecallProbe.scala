@@ -350,8 +350,8 @@ object RecallProbe {
       // matches the raw tiers exactly and any recall delta is purely
       // the residual encoding. Seeds are the same ids-1..16 sub-slices
       // (of the residual frame), keeping the budget comparison honest.
-      val rRoot = graft.ops.Scratch.dir(s"probe_ivfadc_${mode}_${mSub}_${dsub}_16")
-      graft.ops.Scratch.once(rRoot) {
+      val rRoot = graft.ops.Artifacts.root(spark, sfDir, Seq("embeddings"),
+          "probe_ivfadc", mode, mSub, dsub, 16) { rRoot =>
         graft.ops.IvfIndex.build(
           cands.select(col("nid").as("vec_id"), col("cv").as("v")),
           k = 16, iters = 2, rRoot)
@@ -368,8 +368,8 @@ object RecallProbe {
       // full-space top-5, so the row reports the end-to-end effect of
       // rotation+cut+residual together.
       val rotCands = rotate(cands, "nid", "cv")
-      val rrRoot = graft.ops.Scratch.dir(s"probe_ivfadc_rot_${mode}_${mSub}_2_16")
-      graft.ops.Scratch.once(rrRoot) {
+      val rrRoot = graft.ops.Artifacts.root(spark, sfDir, Seq("embeddings"),
+          "probe_ivfadc_rot", mode, mSub, 2, 16) { rrRoot =>
         graft.ops.IvfIndex.build(
           rotCands.select(col("nid").as("vec_id"), col("cv").as("v")),
           k = 16, iters = 2, rrRoot)
@@ -385,8 +385,8 @@ object RecallProbe {
       // index (probePqResidual replays it). Same budget, same exact arm
       // — this row vs pq_rot_residual isolates what the allocation adds
       // through the production artifact, not just the probe-local math.
-      val raRoot = graft.ops.Scratch.dir(s"probe_ivfadc_rotalloc_${mode}_${mSub}_2_16")
-      graft.ops.Scratch.once(raRoot) {
+      val raRoot = graft.ops.Artifacts.root(spark, sfDir, Seq("embeddings"),
+          "probe_ivfadc_rotalloc", mode, mSub, 2, 16) { raRoot =>
         graft.ops.IvfIndex.build(
           rotCands.select(col("nid").as("vec_id"), col("cv").as("v")),
           k = 16, iters = 2, raRoot)

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Leading principal component via the distributed Gram-reduction
@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * fixes the eigenvector's sign convention.
   *
   * Shared by embed_pca (emits the model) and embed_pca_apply /
-  * whitening (applies it) — one fit per input dir per session via
-  * [[fitMemo]].
+  * whitening (applies it) — one fit per input per session, shared as a
+  * [[graft.ops.Artifacts.value]] by the embed queries.
   */
 object Pca {
 
@@ -142,23 +142,4 @@ object Pca {
     }
     PcaM(Array.tabulate(dim)(d => mu(d + 1)), ws, ls)
   }
-
-  /** Input-deterministic memo keyed by (dir, dim, iters) — the corpus
-    * snapshot under `dir` is immutable within a run (the Bpe.fitMemo
-    * assumption).
-    */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), Pca1]()
-
-  def fitMemo(s: SparkSession, dir: String, dim: Int = 64, iters: Int = 8): Pca1 =
-    cache.computeIfAbsent((dir, dim, iters), _ =>
-      fit1(graft.ops.Similarity.vectors(graft.core.Tables.embeddings(s, dir)), dim, iters))
-
-  private val cacheM =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int), PcaM]()
-
-  def fitMMemo(s: SparkSession, dir: String, dim: Int = 64, iters: Int = 8,
-               m: Int = 3): PcaM =
-    cacheM.computeIfAbsent((dir, dim, iters, m), _ =>
-      fitM(graft.ops.Similarity.vectors(graft.core.Tables.embeddings(s, dir)), dim, iters, m))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenizer TRAINING (Sennrich et al., ACL 2016) —
@@ -97,8 +97,8 @@ object Bpe {
     replace(enc, lit(s";$a;;$b;"), lit(s";$a$b;"))
 
   /** Learn `n` merges. The returned list is plain driver data (pure
-    * function of the input corpus), so [[fitMemo]] can cache it without
-    * any executor-state eviction concerns.
+    * function of the input corpus), so the text queries share one fit
+    * per session as a [[Artifacts.value]].
     */
   def fit(docs: DataFrame, n: Int): Seq[Merge] = fitVocab(vocab0(docs), n)
 
@@ -301,16 +301,4 @@ object Bpe {
     val enc = merges.foldLeft(col("enc")) { (e, m) => applyMerge(e, m.left, m.right) }
     vocab.withColumn("enc", enc)
   }
-
-  /** Session-agnostic memo: merges are input-deterministic driver data
-    * keyed by (input dir, n) — the corpus snapshot under `dir` is
-    * immutable within a run (same assumption the dedup signature memo
-    * documents).
-    */
-  private val fitCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[Merge]]()
-
-  def fitMemo(s: SparkSession, dir: String, n: Int): Seq[Merge] =
-    fitCache.computeIfAbsent((dir, n),
-      _ => fit(graft.core.Tables.documents(s, dir), n))
 }

@@ -2,6 +2,8 @@ package graft.ops
 
 /** Per-PROCESS scratch directories for queries that exercise a
   * write→read-back cycle (format roundtrips, the persisted IVF index).
+  * Build-once index roots live here too, named and owned by
+  * [[Artifacts.root]].
   *
   * The r10 scheme keyed scratch by `dir.hashCode` alone, so two
   * concurrent JVMs over the same data dir (a Bench racing a Verify)
@@ -28,76 +30,9 @@ object Scratch {
     ()
   }
 
-  /** Per-sweep namespace salt (r12 advice): PlanSpec's pre-checkpoint
-    * window sweep re-runs every query inside Ckpt.recording, and a
-    * [[once]]-memoized artifact build (an index fit) that some earlier
-    * test already ran would be SKIPPED there — sweep coverage of the
-    * build-phase plans would depend on test order. [[withNamespace]]
-    * reroutes every dir()/once() key under a fresh salt for the
-    * duration, so artifact builds always execute inside the recording.
-    * Single-threaded use (the sweeps are sequential).
-    */
-  @volatile private var salt: String = ""
+  /** Absolute scratch path for `tag`, unique to this process. */
+  def dir(tag: String): String = root.resolve(tag).toString
 
-  def withNamespace[T](ns: String)(body: => T): T = {
-    val prev = salt
-    salt = ns
-    try body finally salt = prev
-  }
-
-  /** Absolute scratch path for `tag`, unique to this process (and to
-    * the active [[withNamespace]] salt, if any).
-    */
-  def dir(tag: String): String =
-    (if (salt.isEmpty) root.resolve(tag)
-     else root.resolve(salt).resolve(tag)).toString
-
-  /** Run `body` at most ONCE per (process, tag) — the artifact-build
-    * memo for queries that construct a deterministic on-disk artifact
-    * under a [[dir]] and then read it back: within one JVM the artifact
-    * is a pure function of the input dir, so sweeps/tests re-invoking
-    * the query re-probe the EXISTING tree instead of re-fitting and
-    * re-writing it (measured ~3-5 s per index rebuild, times three
-    * PlanSpec sweeps).
-    *
-    * REENTRANCY (r16-opt): bodies may call [[once]] for a DIFFERENT tag
-    * (a mutation gate clones a shared base artifact, whose own build is
-    * once-guarded). Running bodies inside `computeIfAbsent` breaks
-    * then — a nested insert on the same ConcurrentHashMap throws
-    * "Recursive update" whenever the two tags collide on a bin, i.e.
-    * intermittently by hash. So the map only ever allocates per-tag
-    * LOCK objects (computeIfAbsent completes before any body runs) and
-    * the body executes under the tag's monitor with a done-set check.
-    * Nested tags take nested monitors; the artifact dependency graph is
-    * a DAG (mutation root -> base root, never cyclic), so no deadlock.
-    * Concurrent first callers of one tag still serialize; later callers
-    * hit the done-set fast path.
-    */
-  private val onceLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private val onceDone =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  // tags held by the CURRENT thread's in-flight bodies: same-tag
-  // re-entry (a body calling once for its OWN tag) would silently
-  // recurse under the reentrant monitor until stack overflow — fail
-  // loud with the tag name instead (r17, ADVICE)
-  private val held = ThreadLocal.withInitial(
-    () => scala.collection.mutable.Set[String]())
-
-  def once(tag: String)(body: => Unit): Unit =
-    if (!onceDone.contains(tag)) {
-      if (held.get().contains(tag))
-        throw new IllegalStateException(
-          s"Scratch.once('$tag'): the build body re-entered its own tag " +
-            "— artifact dependencies must form a DAG of DISTINCT tags")
-      val lock = onceLocks.computeIfAbsent(tag, _ => new Object)
-      lock.synchronized {
-        if (!onceDone.contains(tag)) {
-          held.get() += tag
-          try body finally held.get() -= tag
-          onceDone.add(tag): Unit
-        }
-      }
-    }
+  /** Recursively delete a scratch tree (no-op when absent). */
+  private[ops] def delete(path: String): Unit = deleteRec(new java.io.File(path))
 }

@@ -44,15 +44,6 @@ object DedupQueries {
        |hs AS (SELECT doc_id, list_sort([${duckHash("'g'", "x")} for x in s]) AS hs, len(s) AS n
        |       FROM sh WHERE len(s) > 0)""".stripMargin
 
-  /** Spark side of `hs`: doc_id, sorted 64-bit shingle hashes, count.
-    * `hash` defaults to the md5-derived portable hash (DuckDB-checkable);
-    * production swaps in `TextOps.xxhash64Sql` — every downstream dedup
-    * operator is hash-agnostic (proved by TextOpsSpec).
-    */
-  private def buildDocHashes(s: org.apache.spark.sql.SparkSession, dir: String,
-                             hash: TextOps.HashSql) =
-    hashesOfDocs(s, Tables.documents(s, dir), hash)
-
   /** The signature build over an arbitrary documents frame — the
     * [[docHashes]] body below the memo tier, shared with
     * CorpusPipeline's dedup stages: (doc_id, sorted shingle hashes, n).
@@ -76,84 +67,41 @@ object DedupQueries {
       size(col("sh")).as("n")), "doc_id")
   }
 
-  /** Session-lifetime signature cache: five dedup family members consume
-    * the same (doc_id, sorted shingle hashes, n) table, and within one
+  /** Session signature table: five dedup family members consume the
+    * same (doc_id, sorted shingle hashes, n) table, and within one
     * Verify/Bench run each would otherwise re-pay the whole tokenize →
     * shingle → hash pipeline (the measured cost driver of the family).
-    * Persisted MEMORY_AND_DISK, keyed by (session, dir, hash-fn output) —
-    * the hash fn is identified by a sample of its generated SQL because
-    * eta-expanded function values have no structural equality.
+    * A [[graft.ops.Artifacts]] frame over `documents`, keyed by the
+    * hash tier (identified by a sample of its generated SQL, because
+    * eta-expanded function values have no structural equality).
+    * `hash` defaults to the md5-derived portable hash (DuckDB-checkable);
+    * production swaps in `TextOps.xxhash64Sql` — every downstream dedup
+    * operator is hash-agnostic (proved by TextOpsSpec).
     *
     * This is the in-session form of the 100 TB pattern: a SIGNATURE TABLE
     * persisted (parquet) once per corpus snapshot, reused by every dedup
     * pass over that snapshot, invalidated with the snapshot — never
-    * recomputed per query. Disable with
-    * `spark.graft.dedup.shareSignatures=false` to re-derive per query.
+    * recomputed per query.
     */
-  private val hsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), org.apache.spark.sql.DataFrame]()
-
-  /** Cache key for the owning session: a UUID minted on first use and
-    * pinned in the SESSION-scoped conf (globally unique, no cross-session
-    * collisions — identityHashCode is NOT unique; sessionUUID is
-    * package-private). Entries are evicted + unpersisted when the
-    * session's application ends, so the memo can't pin executor blocks
-    * past the session lifetime. Known limitation (documented, not
-    * detected): entries go stale if the parquet under `dir` is REWRITTEN
-    * within one session — a corpus snapshot is immutable in the
-    * production analog; set `spark.graft.dedup.shareSignatures=false`
-    * when rewriting inputs.
-    */
-  private def sessionKey(s: org.apache.spark.sql.SparkSession): String = synchronized {
-    s.conf.getOption("spark.graft.dedup.sessionKey").getOrElse {
-      val k = java.util.UUID.randomUUID().toString
-      s.conf.set("spark.graft.dedup.sessionKey", k)
-      k
-    }
-  }
-
-  private val evictionRegistered = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def registerEviction(s: org.apache.spark.sql.SparkSession): Unit = {
-    val uuid = sessionKey(s)
-    if (evictionRegistered.add(uuid))
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          import scala.jdk.CollectionConverters._
-          Seq(hsCache, pairsCache, ccCache, snmCache).foreach { cache =>
-            cache.keySet.asScala.filter(_._1 == uuid).foreach { k =>
-              // context is stopping: blocks die with it; removal is the point
-              Option(cache.remove(k)).foreach(df =>
-                try df.unpersist(false) catch { case _: Throwable => () })
-            }
-          }
-          evictionRegistered.remove(uuid)
-        }
-      })
-  }
-
   private[graft] def docHashes(s: org.apache.spark.sql.SparkSession, dir: String,
                                hash: TextOps.HashSql = null) = {
     val h = Option(hash).getOrElse(TextOps.activeHash(s)) // bench A/B hook
-    if (!s.conf.get("spark.graft.dedup.shareSignatures", "true").toBoolean)
-      buildDocHashes(s, dir, h)
-    else {
-      registerEviction(s)
-      hsCache.computeIfAbsent(
-        (sessionKey(s), dir, h("'s'", "x")),
-        // pin the cached layout: hash(doc_id) at executor parallelism.
-        // AQE sizes cached partitions from BYTES, which packs this
-        // compute-dense table (shingle arrays consumed by explode /
-        // array_intersect in ~20 queries) onto 1-3 partitions; the pin
-        // keeps every consumer's map work parallel and co-locates the
-        // verify joins' doc_id legs. One exchange at build, amortized
-        // across the family (r17-opt, guide §2.2).
-        _ => buildDocHashes(s, dir, h)
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    graft.ops.Artifacts.frame(s, dir, Seq("documents"), "dedup.signatures", h("'s'", "x")) {
+      // pin the cached layout: hash(doc_id) at executor parallelism.
+      // AQE sizes cached partitions from BYTES, which packs this
+      // compute-dense table (shingle arrays consumed by explode /
+      // array_intersect in ~20 queries) onto 1-3 partitions; the pin
+      // keeps every consumer's map work parallel and co-locates the
+      // verify joins' doc_id legs. One exchange at build, amortized
+      // across the family (r17-opt, guide §2.2).
+      hashesOfDocs(s, Tables.documents(s, dir), h)
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
     }
   }
+
+  /** The session hash tier as an artifact param (see [[docHashes]]). */
+  private def hashTier(s: org.apache.spark.sql.SparkSession): String =
+    TextOps.activeHash(s)("'s'", "x")
 
   private def duckJaccard(a: String, b: String): String =
     s"""round(len(list_intersect($a, $b))::DOUBLE /
@@ -210,19 +158,9 @@ object DedupQueries {
     * + verify passes per run. Production analog: a persisted pairs table
     * next to the signature table, refreshed with the corpus snapshot.
     */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), org.apache.spark.sql.DataFrame]()
-
   private[graft] def sharedPairs(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    if (!s.conf.get("spark.graft.dedup.shareSignatures", "true").toBoolean)
-      prefixFilteredPairs(docHashes(s, dir))
-    else {
-      registerEviction(s)
-      pairsCache.computeIfAbsent(
-        (sessionKey(s), dir, TextOps.activeHash(s)("'s'", "x")),
-        _ => prefixFilteredPairs(docHashes(s, dir))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+    graft.ops.Artifacts.frame(s, dir, Seq("documents"), "dedup.pairs", hashTier(s))(
+      prefixFilteredPairs(docHashes(s, dir)))
 
   /** Third memo tier: the CC cluster map (node, rep) over the J>=0.8
     * pairs. Strictly downstream of [[sharedPairs]] but NOT free — the
@@ -231,21 +169,11 @@ object DedupQueries {
     * identical map. Production analog: the cluster-assignment table a
     * pipeline writes next to the pairs table per corpus snapshot.
     */
-  private val ccCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), org.apache.spark.sql.DataFrame]()
-
-  private def sharedClusters(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    def build() = graft.ops.Components.connectedComponents(
-      sharedPairs(s, dir).where(col("sim") >= 0.8).select(col("i"), col("j")))
-      .select(col("node"), col("rep"))
-    if (!s.conf.get("spark.graft.dedup.shareSignatures", "true").toBoolean) build()
-    else {
-      registerEviction(s)
-      ccCache.computeIfAbsent(
-        (sessionKey(s), dir, TextOps.activeHash(s)("'s'", "x")),
-        _ => build().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
-  }
+  private def sharedClusters(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    graft.ops.Artifacts.frame(s, dir, Seq("documents"), "dedup.clusters", hashTier(s))(
+      graft.ops.Components.connectedComponents(
+        sharedPairs(s, dir).where(col("sim") >= 0.8).select(col("i"), col("j")))
+        .select(col("node"), col("rep")))
 
   val dedupExact: QueryDef = QueryDef.sql("dedup_exact",
     """SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n
@@ -890,11 +818,10 @@ object DedupQueries {
     * physical plan). Production analog: a persisted rank table refreshed
     * with the corpus snapshot, next to the signature table.
     */
-  private val snmCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), org.apache.spark.sql.DataFrame]()
-
-  private def snmRanked(s: org.apache.spark.sql.SparkSession, dir: String, w: Int): org.apache.spark.sql.DataFrame = {
-    def build() = {
+  private def snmRanked(s: org.apache.spark.sql.SparkSession, dir: String, w: Int): org.apache.spark.sql.DataFrame =
+    // w is a param: the cached frame bakes bkt = rk div w in, so a
+    // caller with a different window must not share the entry
+    graft.ops.Artifacts.frame(s, dir, Seq("documents"), "dedup.snm_ranks", hashTier(s), w) {
       // EXPLICIT partition count pins the exchange against AQE
       // coalescing, and the PERSIST below is just as load-bearing: a
       // range exchange re-SAMPLES its bounds on every execution with an
@@ -922,17 +849,6 @@ object DedupQueries {
       sorted.unpersist(false)
       ranked
     }
-    if (!s.conf.get("spark.graft.dedup.shareSignatures", "true").toBoolean)
-      build() // A/B-flag path: persisted but untracked (no eviction hook)
-    else {
-      registerEviction(s)
-      // w is part of the key: the cached frame bakes bkt = rk div w in,
-      // so a caller with a different window must not share the entry
-      snmCache.computeIfAbsent(
-        (sessionKey(s), dir, TextOps.activeHash(s)("'s'", "x") + s"|w=$w"),
-        _ => build())
-    }
-  }
 
   val dedupSortedNeighborhood: QueryDef = {
     val w = 8

@@ -692,16 +692,12 @@ object EmbedQueries {
     * one-artifact discipline extended family-wide).
     */
   private[graft] def ivfFullRoot(s: org.apache.spark.sql.SparkSession,
-                                 dir: String, k: Int): String = {
-    val root = graft.ops.Scratch.dir(
-      s"ivf_full_${k}_${Integer.toHexString(dir.hashCode)}")
-    graft.ops.Scratch.once(root) {
+                                 dir: String, k: Int): String =
+    graft.ops.Artifacts.root(s, dir, Seq("embeddings"), "ivf_full", k) { root =>
       graft.ops.IvfIndex.build(
         Similarity.vectors(Tables.embeddings(s, dir))
           .select(col("vec_id"), col("v"), col("label")), k, iters = 2, root)
     }
-    root
-  }
 
   /** Shared oracle CTE chain for the APPEND-mode index queries: the
     * quantizer is fit on the BASE HALF only (vec_id < 400 — c0 seeds
@@ -781,18 +777,13 @@ object EmbedQueries {
     * because it tombstones + compacts the artifact).
     */
   private def ivfAppendRoot(s: org.apache.spark.sql.SparkSession,
-                            dir: String, k: Int): String = {
-    // k joins the memo key (r17, ADVICE): a later per-query param tweak
-    // must miss the memo, never silently serve another k's clone source
-    val root = graft.ops.Scratch.dir(s"ivf_append_${k}_${Integer.toHexString(dir.hashCode)}")
-    graft.ops.Scratch.once(root) {
+                            dir: String, k: Int): String =
+    graft.ops.Artifacts.root(s, dir, Seq("embeddings"), "ivf_append", k) { root =>
       val v = Similarity.vectors(Tables.embeddings(s, dir))
         .select(col("vec_id"), col("v"))
       graft.core.Fs.copyRecursive(s, ivfBase400Root(s, dir, k), root)
       graft.ops.IvfIndex.append(s, v.where(col("vec_id") >= 400), root)
     }
-    root
-  }
 
   /** The shared BASE-HALF build (quantizer fit on vec_id < 400, nothing
     * appended yet) — the starting state of every append-mode surface:
@@ -801,16 +792,13 @@ object EmbedQueries {
     * replays were each re-fitting the identical 2-iteration quantizer).
     */
   private def ivfBase400Root(s: org.apache.spark.sql.SparkSession,
-                             dir: String, k: Int): String = {
-    val root = graft.ops.Scratch.dir(s"ivf_b400_${k}_${Integer.toHexString(dir.hashCode)}")
-    graft.ops.Scratch.once(root) {
+                             dir: String, k: Int): String =
+    graft.ops.Artifacts.root(s, dir, Seq("embeddings"), "ivf_base400", k) { root =>
       graft.ops.IvfIndex.build(
         Similarity.vectors(Tables.embeddings(s, dir))
           .select(col("vec_id"), col("v")).where(col("vec_id") < 400),
         k, iters = 2, root)
     }
-    root
-  }
 
   /** ATTRIBUTE-FILTERED probe over the persisted index — the single
     * most common production serving pattern on a corpus index (r13
@@ -915,9 +903,8 @@ object EmbedQueries {
          |SELECT qid, nid, sim, rnk FROM r WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
       val v = Similarity.vectors(Tables.embeddings(s, dir)).select(col("vec_id"), col("v"))
       // per-invocation root: the replay MUTATES the index, so it can
-      // never share a Scratch.once artifact with another invocation
-      val root = graft.ops.Scratch.dir(
-        s"ivf_stream_${Integer.toHexString(dir.hashCode)}_${streamSeq.incrementAndGet()}")
+      // never share a session artifact with another invocation
+      val root = graft.ops.Scratch.dir(s"ivf_stream_${streamSeq.incrementAndGet()}")
       val batch = v.where(col("vec_id") >= 400)
       // clone the shared base-half root into this invocation's private
       // tree (the replay mutates it) — no per-invocation refit (r16-opt)
@@ -986,8 +973,7 @@ object EmbedQueries {
       val v = Similarity.vectors(Tables.embeddings(s, dir)).select(col("vec_id"), col("v"))
       // per-invocation root: the replay MUTATES the index (see
       // streamingIvfAppendReplay)
-      val root = graft.ops.Scratch.dir(
-        s"ivf_sdel_${Integer.toHexString(dir.hashCode)}_${streamSeq.incrementAndGet()}")
+      val root = graft.ops.Scratch.dir(s"ivf_sdel_${streamSeq.incrementAndGet()}")
       // clone the shared append-mode root (identical build+append
       // state) into this invocation's private tree (r16-opt)
       graft.core.Fs.copyRecursive(s, ivfAppendRoot(s, dir, k), root)
@@ -1095,8 +1081,8 @@ object EmbedQueries {
          |SELECT qid, nid, adist, rnk FROM r WHERE rnk <= 3
          |ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
       val v = Similarity.vectors(Tables.embeddings(s, dir)).select(col("vec_id"), col("v"))
-      val root = graft.ops.Scratch.dir(s"ivfpq_${Integer.toHexString(dir.hashCode)}")
-      graft.ops.Scratch.once(root) {
+      val root = graft.ops.Artifacts.root(s, dir, Seq("embeddings"), "ivfpq",
+          k, m, dsub, kCodes) { root =>
         // clone the shared coarse half, fit only the PQ tier (r16-opt)
         graft.core.Fs.copyRecursive(s, ivfFullRoot(s, dir, k), root)
         graft.ops.IvfIndex.buildPq(s, v, m, dsub, kCodes, iters = 2, root)
@@ -1243,21 +1229,15 @@ object EmbedQueries {
     */
   private def ivfadcResidualRoot(s: org.apache.spark.sql.SparkSession,
                                  dir: String, k: Int, m: Int, dsub: Int,
-                                 kCodes: Int): String = {
-    // the build params join the memo key: the family shares this
-    // artifact TODAY at identical constants, and a later param tweak to
-    // any row must miss the memo, not silently serve the others' index
-    val root = graft.ops.Scratch.dir(
-      s"ivfadc_fam_${k}_${m}_${dsub}_${kCodes}_${Integer.toHexString(dir.hashCode)}")
-    graft.ops.Scratch.once(root) {
+                                 kCodes: Int): String =
+    graft.ops.Artifacts.root(s, dir, Seq("embeddings"), "ivfadc_residual",
+        k, m, dsub, kCodes) { root =>
       // clone the shared coarse half (identical build(vl) — r16-opt),
       // then fit the residual codebooks + SQ8 copy on the clone
       graft.core.Fs.copyRecursive(s, ivfFullRoot(s, dir, k), root)
       graft.ops.IvfIndex.buildPqResidual(s, m, dsub, kCodes, iters = 2, root)
       graft.ops.IvfIndex.buildSq8(s, root)
     }
-    root
-  }
 
   val embedIvfadcResidual: QueryDef = {
     val (k, dim, m, dsub, kCodes) = (16, 64, 8, 8, 16)
@@ -1327,9 +1307,8 @@ object EmbedQueries {
          |SELECT qid, nid, adist, rnk FROM rr WHERE rnk <= 3
          |ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
       val v = Similarity.vectors(Tables.embeddings(s, dir)).select(col("vec_id"), col("v"))
-      val root = graft.ops.Scratch.dir(
-        s"ivfadc_alloc_${k}_${m}_${dsub}_${kCodes}_${Integer.toHexString(dir.hashCode)}")
-      graft.ops.Scratch.once(root) {
+      val root = graft.ops.Artifacts.root(s, dir, Seq("embeddings"), "ivfadc_alloc",
+          k, m, dsub, kCodes) { root =>
         // clone the shared coarse half (the permutation only changes
         // the ENCODED half, fit next — r16-opt §artifact-sharing)
         graft.core.Fs.copyRecursive(s, ivfFullRoot(s, dir, k), root)
@@ -1447,17 +1426,12 @@ object EmbedQueries {
     * they change the artifact.
     */
   private def knnGraphRoot(s: org.apache.spark.sql.SparkSession, dir: String,
-                           k: Int, rounds: Int): String = {
-    // k/rounds join the memo key (r17, ADVICE — the ivfadc_fam discipline)
-    val root = graft.ops.Scratch.dir(
-      s"knng_${k}_${rounds}_${Integer.toHexString(dir.hashCode)}")
-    graft.ops.Scratch.once(root) {
+                           k: Int, rounds: Int): String =
+    graft.ops.Artifacts.root(s, dir, Seq("embeddings"), "knng", k, rounds) { root =>
       graft.ops.KnnGraph.build(
         Similarity.vectors(Tables.embeddings(s, dir))
           .select(col("vec_id"), col("v")), k, rounds, root)
     }
-    root
-  }
 
   /** The shared BASE-3/4 build (vec_id % 4 != 3) the insert-path gates
     * start from: embed_knn_graph_append and streaming_knng_append_replay
@@ -1470,17 +1444,13 @@ object EmbedQueries {
     * full-corpus [[knnGraphRoot]] shared by delete/compact.
     */
   private def knnGraphBase34Root(s: org.apache.spark.sql.SparkSession, dir: String,
-                                 k: Int, rounds: Int): String = {
-    val root = graft.ops.Scratch.dir(
-      s"knng_b34_${k}_${rounds}_${Integer.toHexString(dir.hashCode)}")
-    graft.ops.Scratch.once(root) {
+                                 k: Int, rounds: Int): String =
+    graft.ops.Artifacts.root(s, dir, Seq("embeddings"), "knng_base34", k, rounds) { root =>
       graft.ops.KnnGraph.build(
         Similarity.vectors(Tables.embeddings(s, dir))
           .select(col("vec_id"), col("v")).where(col("vec_id") % 4 =!= 3),
         k, rounds, root)
     }
-    root
-  }
 
   /** Shared exact round-6 squared-L2 DuckDB fragment (the knn-graph
     * gates' scoring metric).
@@ -1652,9 +1622,8 @@ object EmbedQueries {
          |         FROM logd)
          |SELECT src, dst, CAST(d AS DOUBLE) AS d, rnk FROM view WHERE rnk <= $k
          |ORDER BY src, rnk""".stripMargin) { (s, dir) =>
-      val root = graft.ops.Scratch.dir(
-        s"knng_append_${Integer.toHexString(dir.hashCode)}")
-      graft.ops.Scratch.once(root) {
+      val root = graft.ops.Artifacts.root(s, dir, Seq("embeddings"), "knng_append",
+          k, rounds, beam, hops) { root =>
         val v = Similarity.vectors(Tables.embeddings(s, dir))
           .select(col("vec_id"), col("v"))
         // clone the shared base-3/4 artifact, then mutate the clone
@@ -1702,9 +1671,8 @@ object EmbedQueries {
          |  CAST(row_number() OVER (PARTITION BY qid ORDER BY d, nid) AS BIGINT) AS rnk
          |FROM t$hops QUALIFY rnk <= $topk
          |ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
-      val root = graft.ops.Scratch.dir(
-        s"knng_del_${Integer.toHexString(dir.hashCode)}")
-      graft.ops.Scratch.once(root) {
+      val root = graft.ops.Artifacts.root(s, dir, Seq("embeddings"), "knng_delete",
+          k, rounds) { root =>
         val v = Similarity.vectors(Tables.embeddings(s, dir))
           .select(col("vec_id"), col("v"))
         // clone the shared full-corpus artifact (identical base build),
@@ -1755,9 +1723,8 @@ object EmbedQueries {
          |         FROM merged)
          |SELECT src, dst, CAST(d AS DOUBLE) AS d, rnk FROM view WHERE rnk <= $k
          |ORDER BY src, rnk""".stripMargin) { (s, dir) =>
-      val root = graft.ops.Scratch.dir(
-        s"knng_compact_${Integer.toHexString(dir.hashCode)}")
-      graft.ops.Scratch.once(root) {
+      val root = graft.ops.Artifacts.root(s, dir, Seq("embeddings"), "knng_compact",
+          k, rounds) { root =>
         val v = Similarity.vectors(Tables.embeddings(s, dir))
           .select(col("vec_id"), col("v"))
         // clone the shared full-corpus artifact (identical base build),
@@ -1838,9 +1805,8 @@ object EmbedQueries {
          |ORDER BY src, rnk""".stripMargin) { (s, dir) =>
       val v = Similarity.vectors(Tables.embeddings(s, dir)).select(col("vec_id"), col("v"))
       // per-invocation root: the replay MUTATES the artifact, so it can
-      // never share a Scratch.once build with another invocation
-      val root = graft.ops.Scratch.dir(
-        s"knng_stream_${Integer.toHexString(dir.hashCode)}_${streamSeq.incrementAndGet()}")
+      // never share a session artifact with another invocation
+      val root = graft.ops.Scratch.dir(s"knng_stream_${streamSeq.incrementAndGet()}")
       // clone the shared base-3/4 artifact into this invocation's
       // private root (the replay mutates it per micro-batch) — the
       // base build itself runs once per run (r16-opt)
@@ -1900,8 +1866,7 @@ object EmbedQueries {
          |  CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rnk FROM p)
          |SELECT qid, nid, sim, rnk FROM r WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
       val v = Similarity.vectors(Tables.embeddings(s, dir)).select(col("vec_id"), col("v"))
-      val root = graft.ops.Scratch.dir(s"ivf_delete_${Integer.toHexString(dir.hashCode)}")
-      graft.ops.Scratch.once(root) {
+      val root = graft.ops.Artifacts.root(s, dir, Seq("embeddings"), "ivf_delete", k) { root =>
         // clone the shared append-mode root (identical build+append
         // state), then tombstone + compact the clone (r16-opt)
         graft.core.Fs.copyRecursive(s, ivfAppendRoot(s, dir, k), root)
@@ -2924,6 +2889,19 @@ object EmbedQueries {
     }
   }
 
+  /** The session's PCA fits over `embeddings` (driver values shared by
+    * embed_pca and the apply / whitening / rotation rows).
+    */
+  private def pcaFit(s: org.apache.spark.sql.SparkSession, dir: String,
+                     dim: Int, iters: Int): graft.ml.Pca.Pca1 =
+    graft.ops.Artifacts.value(s, dir, Seq("embeddings"), "pca.top1", dim, iters)(
+      graft.ml.Pca.fit1(Similarity.vectors(Tables.embeddings(s, dir)), dim, iters))
+
+  private def pcaFitM(s: org.apache.spark.sql.SparkSession, dir: String,
+                      dim: Int, iters: Int, m: Int): graft.ml.Pca.PcaM =
+    graft.ops.Artifacts.value(s, dir, Seq("embeddings"), "pca.topm", dim, iters, m)(
+      graft.ml.Pca.fitM(Similarity.vectors(Tables.embeddings(s, dir)), dim, iters, m))
+
   /** Shared DuckDB CTE chain replaying [[graft.ml.Pca.fit1]]'s
     * rounded-moment covariance + power iteration (see that scaladoc for
     * the determinism contract). MATERIALIZED is load-bearing: y_t is
@@ -2968,7 +2946,7 @@ object EmbedQueries {
          |SELECT CAST(mu.i AS BIGINT) AS dim, mu.m AS mean, rr.x AS pc1,
          |  (SELECT l FROM lam) AS lam
          |FROM mu JOIN r$iters rr ON mu.i = rr.i ORDER BY dim""".stripMargin) { (s, dir) =>
-      val p = graft.ml.Pca.fitMemo(s, dir, dim, iters)
+      val p = pcaFit(s, dir, dim, iters)
       val rows = (1 to dim).map(d => (d.toLong, p.mu(d - 1), p.w(d - 1), p.lam))
       s.createDataFrame(rows).toDF("dim", "mean", "pc1", "lam")
         .orderBy(col("dim"))
@@ -2982,7 +2960,7 @@ object EmbedQueries {
     * its λ-whitened coordinate zw = t/√λ₁ (unit variance along pc1).
     *
     * Scale shape: the model is a plan literal (round-6 driver arrays
-    * from [[graft.ml.Pca.fitMemo]] — k×d doubles, the broadcast-table
+    * from [[pcaFit]] — k×d doubles, the broadcast-table
     * tier); the apply pass is MAP-ONLY, one native [[Similarity.dotC]]
     * kernel per row inside whole-stage codegen — no shuffle, no window.
     * The oracle replays the projection as the same ascending-dim fold
@@ -2999,7 +2977,7 @@ object EmbedQueries {
          |  GROUP BY v.vec_id)
          |SELECT vec_id, t, round(t / sqrt((SELECT l FROM lam)), 6) AS zw
          |FROM proj ORDER BY vec_id""".stripMargin) { (s, dir) =>
-      val p = graft.ml.Pca.fitMemo(s, dir, dim, iters)
+      val p = pcaFit(s, dir, dim, iters)
       val centered = zip_with(col("v"), lit(p.mu), (x, m) => x - m)
       Similarity.vectors(Tables.embeddings(s, dir))
         .select(col("vec_id"),
@@ -3071,7 +3049,7 @@ object EmbedQueries {
          |JOIN rc2_$iters r2 ON mu.i = r2.i
          |JOIN rc3_$iters r3 ON mu.i = r3.i
          |ORDER BY dim""".stripMargin) { (s, dir) =>
-      val p = graft.ml.Pca.fitMMemo(s, dir, dim, iters, m)
+      val p = pcaFitM(s, dir, dim, iters, m)
       val rows = (1 to dim).map(d => (d.toLong, p.mu(d - 1),
         p.w(0)(d - 1), p.w(1)(d - 1), p.w(2)(d - 1),
         p.lam(0), p.lam(1), p.lam(2)))
@@ -3113,7 +3091,7 @@ object EmbedQueries {
          |  round(t2 / sqrt((SELECT l FROM lamc2)), 6) AS z2,
          |  round(t3 / sqrt((SELECT l FROM lamc3)), 6) AS z3
          |FROM proj ORDER BY vec_id""".stripMargin) { (s, dir) =>
-      val p = graft.ml.Pca.fitMMemo(s, dir, dim, iters, m)
+      val p = pcaFitM(s, dir, dim, iters, m)
       val centered = zip_with(col("v"), lit(p.mu), (x, mm) => x - mm)
       Similarity.vectors(Tables.embeddings(s, dir))
         .select(col("vec_id") +:
@@ -3216,7 +3194,7 @@ object EmbedQueries {
       // the two engines' decimal→double casts disagree by one ulp —
       // the decimal is exact on both sides, the double is not
       import org.apache.spark.sql.expressions.Window
-      val pm = graft.ml.Pca.fitMMemo(s, dir, dim, iters, mPca)
+      val pm = pcaFitM(s, dir, dim, iters, mPca)
       val centered = zip_with(col("v"), lit(pm.mu), (x, mm) => x - mm)
       val rot = Similarity.vectors(Tables.embeddings(s, dir))
         .select(col("vec_id"), array((0 until mPca).map(c =>
@@ -3408,7 +3386,7 @@ object EmbedQueries {
          |SELECT qid, nid, adist, rnk FROM r WHERE rnk <= 3
          |ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val pm = graft.ml.Pca.fitMMemo(s, dir, dim, iters, mPca)
+      val pm = pcaFitM(s, dir, dim, iters, mPca)
       val destOf = allocGreedy(pm.lam.toSeq, m, dsub)
       val srcOf = Array.ofDim[Int](mPca)
       destOf.zipWithIndex.foreach { case (dest, src) => srcOf(dest) = src }

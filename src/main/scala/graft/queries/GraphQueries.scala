@@ -13,22 +13,6 @@ import graft.core.Tables
   */
 object GraphQueries {
 
-  /** Session-lifetime packed trade-pair memo — the graph-family analog
-    * of DedupQueries.docHashes: five queries (pagerank, k-core, BFS,
-    * PPR, random walk) consume the identical DISTINCT bipartite
-    * customer–supplier pair table (customer 2k, supplier 2k+1) and each
-    * re-paid the lineitem ⋈ orders + distinct build within one
-    * Verify/Bench run. Persisted MEMORY_AND_DISK once per (session,
-    * dir); a few hundred thousand 16-byte rows at sf0.1. The 100 TB
-    * analog is the materialized EDGE SNAPSHOT every crawl-graph
-    * pipeline maintains beside the crawl: built once per snapshot,
-    * reused by every link-analysis pass, invalidated with the snapshot.
-    * Disable with `spark.graft.graph.sharePairs=false` (same immutable-
-    * input caveat as the dedup memo).
-    */
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), org.apache.spark.sql.DataFrame]()
-
   /** Conditional broadcast hint for ITERATION-STATE tables whose row
     * count grows with |V| — ranks, labels, frontiers, HITS scores,
     * k-core survivor sets. At gate scale these are thousands of rows
@@ -63,32 +47,6 @@ object GraphQueries {
     }
   }
 
-  private def sessionKey(s: org.apache.spark.sql.SparkSession): String = synchronized {
-    s.conf.getOption("spark.graft.graph.sessionKey").getOrElse {
-      val k = java.util.UUID.randomUUID().toString
-      s.conf.set("spark.graft.graph.sessionKey", k)
-      k
-    }
-  }
-
-  private val evictionRegistered = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def registerEviction(s: org.apache.spark.sql.SparkSession): Unit = {
-    val uuid = sessionKey(s)
-    if (evictionRegistered.add(uuid))
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          import scala.jdk.CollectionConverters._
-          pairsMemo.keySet.asScala.filter(_._1 == uuid).foreach { k =>
-            Option(pairsMemo.remove(k)).foreach(df =>
-              try df.unpersist(false) catch { case _: Throwable => () })
-          }
-          evictionRegistered.remove(uuid)
-        }
-      })
-  }
-
   private def buildPackedPairs(s: org.apache.spark.sql.SparkSession,
                                dir: String): org.apache.spark.sql.DataFrame =
     Tables.lineitem(s, dir)
@@ -98,39 +56,42 @@ object GraphQueries {
       .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
       .distinct()
 
-  private def memoized(s: org.apache.spark.sql.SparkSession, dir: String, kind: String)
-                      (build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (!s.conf.get("spark.graft.graph.sharePairs", "true").toBoolean) build
-    else {
-      registerEviction(s)
-      pairsMemo.computeIfAbsent((sessionKey(s), dir, kind),
-        _ => build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
-
-  /** DISTINCT packed (c = 2·custkey, s = 2·suppkey+1) trade pairs,
-    * memoized per (session, dir). Callers must NOT unpersist it.
+  /** DISTINCT packed (c = 2·custkey, s = 2·suppkey+1) trade pairs — a
+    * session artifact, the graph-family analog of
+    * DedupQueries.docHashes: five queries (pagerank, k-core, BFS, PPR,
+    * random walk) consume the identical DISTINCT bipartite
+    * customer–supplier pair table and each re-paid the lineitem ⋈
+    * orders + distinct build within one Verify/Bench run; a few hundred
+    * thousand 16-byte rows at sf0.1. The 100 TB analog is the
+    * materialized EDGE SNAPSHOT every crawl-graph pipeline maintains
+    * beside the crawl: built once per snapshot, reused by every
+    * link-analysis pass, invalidated with the snapshot. Callers must
+    * NOT unpersist it.
     */
   private[graft] def packedTradePairs(s: org.apache.spark.sql.SparkSession,
                                       dir: String): org.apache.spark.sql.DataFrame =
-    memoized(s, dir, "packed")(buildPackedPairs(s, dir))
+    graft.ops.Artifacts.frame(s, dir, Seq("lineitem", "orders"), "graph.packed_pairs")(
+      buildPackedPairs(s, dir))
 
   /** The support-8 co-supply edge list (x < y suppliers sharing ≥ 8
     * orders) — triangles, local clustering and assortativity all start
     * from THIS table, and the per-order wedge self-join that builds it
-    * is the family's cost driver. Memoized like [[packedTradePairs]];
-    * callers must NOT unpersist it.
+    * is the family's cost driver. A session artifact like
+    * [[packedTradePairs]]; callers must NOT unpersist it.
     */
   private[graft] def coSupplyEdges(s: org.apache.spark.sql.SparkSession,
-                                   dir: String): org.apache.spark.sql.DataFrame =
-    memoized(s, dir, "cosupply8") {
+                                   dir: String): org.apache.spark.sql.DataFrame = {
+    val support = 8
+    graft.ops.Artifacts.frame(s, dir, Seq("lineitem"), "graph.cosupply", support) {
       val per = Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("o"), col("l_suppkey").as("sk")).distinct()
       per.as("a").join(per.as("b"),
           col("a.o") === col("b.o") && col("a.sk") < col("b.sk"))
         .groupBy(col("a.sk").as("x"), col("b.sk").as("y"))
-        .agg(count(lit(1)).as("cnt")).where(col("cnt") >= 8)
+        .agg(count(lit(1)).as("cnt")).where(col("cnt") >= support)
         .select(col("x"), col("y"))
     }
+  }
 
   /** The reusable power-iteration core over an UNDIRECTED edge list
     * (already symmetrized: both directions present): computes
@@ -464,7 +425,7 @@ object GraphQueries {
     * like [[packedTradePairs]]. Callers must NOT unpersist it.
     */
   private def strongPairs(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    memoized(s, dir, s"strong$lpMinSup") {
+    graft.ops.Artifacts.frame(s, dir, Seq("lineitem", "orders"), "graph.strong_pairs", lpMinSup) {
       Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
@@ -1333,14 +1294,15 @@ object GraphQueries {
 
   /** (above-mean directed nation-trade edges, cached weighted edge
     * list) — the shared construction behind [[graphReciprocity]] and
-    * [[graphScc]]. The weighted edge list rides the session memo
-    * (kind "nation", same lifecycle as [[packedTradePairs]]): the
+    * [[graphScc]]. The weighted edge list is a session artifact
+    * ("graph.nation_edges", like [[packedTradePairs]]): the
     * lineitem ⋈ orders ⋈ dims resolution — the whole family's cost —
     * runs once per (session, dir). Callers must NOT unpersist it.
     */
   private[graft] def nationEdgeFrames(s: org.apache.spark.sql.SparkSession,
                                       dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val e0 = memoized(s, dir, "nation") {
+    val e0 = graft.ops.Artifacts.frame(s, dir,
+        Seq("lineitem", "orders", "customer", "supplier"), "graph.nation_edges") {
       Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))

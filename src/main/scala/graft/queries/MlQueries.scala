@@ -13,58 +13,16 @@ import graft.ops.{HourRingFeatures, SeriesAggs, TextOps}
   */
 object MlQueries {
 
-  /** Session memo of [[Poisson.buildDataset]] per (session, dir) — the
-    * J2 dataset frame is consumed by TWO registered queries (ml_dataset
-    * hash-gates the frame; ml_poisson_predict trains/predicts on it),
-    * and before r16-opt each derived the full two-profile ring +
-    * forward-window pipeline independently (~2 s apiece at sf0.1).
-    * Same lifecycle as the dedup signature memos (DedupQueries.docHashes):
-    * keyed by a session UUID, persisted MEMORY_AND_DISK, evicted +
-    * unpersisted at application end. Production analog: the persisted
-    * training-dataset table a pipeline writes once per snapshot.
+  /** Session artifact of [[Poisson.buildDataset]] — the J2 dataset
+    * frame is consumed by TWO registered queries (ml_dataset hash-gates
+    * the frame; ml_poisson_predict trains/predicts on it), and before
+    * r16-opt each derived the full two-profile ring + forward-window
+    * pipeline independently (~2 s apiece at sf0.1). Production analog:
+    * the persisted training-dataset table a pipeline writes once per
+    * snapshot.
     */
-  private val dsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  private def sessionKey(s: SparkSession): String = synchronized {
-    s.conf.getOption("spark.graft.ml.sessionKey").getOrElse {
-      val k = java.util.UUID.randomUUID().toString
-      s.conf.set("spark.graft.ml.sessionKey", k)
-      k
-    }
-  }
-
-  private val evictionRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  // Eviction fires at application end only: the bench/verify drivers run
-  // ONE session per application, so per-session eviction would be dead
-  // code here. A long-lived multi-session app would accumulate one
-  // persisted frame per (session, dir) — if the engine ever hosts such
-  // an app, key eviction on session close too (r17, ADVICE — the
-  // single-session-per-app assumption made explicit).
-  private def pooledDataset(s: SparkSession, dir: String): DataFrame = {
-    if (!s.conf.get("spark.graft.ml.shareDataset", "true").toBoolean)
-      Poisson.buildDataset(s, dir)
-    else {
-      val uuid = sessionKey(s)
-      if (evictionRegistered.add(uuid))
-        s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            import scala.jdk.CollectionConverters._
-            dsMemo.keySet.asScala.filter(_._1 == uuid).foreach { k =>
-              Option(dsMemo.remove(k)).foreach(df =>
-                try df.unpersist(false) catch { case _: Throwable => () })
-            }
-            evictionRegistered.remove(uuid)
-          }
-        })
-      dsMemo.computeIfAbsent((uuid, dir),
-        _ => Poisson.buildDataset(s, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
-  }
+  private def pooledDataset(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Artifacts.frame(s, dir, Seq("events"), "ml.dataset")(Poisson.buildDataset(s, dir))
 
   /** W1: 24 cyclic hourly lags of the station's avg measure per event,
     * emitted long-form (event_id, i, measure) for the oracle. One query

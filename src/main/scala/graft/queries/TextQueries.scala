@@ -1141,6 +1141,13 @@ object TextQueries {
 
   private val bpeMerges = 8
 
+  /** The session's BPE merge list over `documents` (one driver-side fit
+    * shared by the four BPE queries).
+    */
+  private def bpeFit(s: org.apache.spark.sql.SparkSession, dir: String): Seq[graft.ops.Bpe.Merge] =
+    graft.ops.Artifacts.value(s, dir, Seq("documents"), "bpe.merges", bpeMerges)(
+      graft.ops.Bpe.fit(Tables.documents(s, dir), bpeMerges))
+
   /** DuckDB twin of [[graft.ops.Bpe]]: v0 = char-encoded word counts;
     * per merge i: px{i}/p{i} mirror Bpe.pairCounts (projected unnest —
     * DuckDB's range() rejects lateral column args), b{i} the argmax with
@@ -1165,7 +1172,7 @@ object TextQueries {
 
   /** The learned merge table itself — rank, pair, merged symbol, and the
     * pair's corpus count at merge time. Output is driver-built from
-    * [[graft.ops.Bpe.fitMemo]]'s returned rows (n-row tiny frame — the
+    * [[bpeFit]]'s returned rows (n-row tiny frame — the
     * merges ARE collected data by construction of the algorithm).
     */
   val textBpeMerges: QueryDef = QueryDef.sql("text_bpe_merges",
@@ -1175,7 +1182,7 @@ object TextQueries {
        |  a || b AS merged, c AS pair_count
        |FROM m ORDER BY rank""".stripMargin) { (s, dir) =>
     import s.implicits._
-    graft.ops.Bpe.fitMemo(s, dir, bpeMerges)
+    bpeFit(s, dir)
       .map(m => (m.rank.toLong, m.left, m.right, m.left + m.right, m.count))
       .toDF("rank", "left_sym", "right_sym", "merged", "pair_count")
       .orderBy(col("rank"))
@@ -1194,7 +1201,7 @@ object TextQueries {
        |SELECT token, CAST(sum(cnt) AS BIGINT) AS total_cnt,
        |  CAST(count(DISTINCT word) AS BIGINT) AS n_words
        |FROM tok GROUP BY token ORDER BY total_cnt DESC, token LIMIT 30""".stripMargin) { (s, dir) =>
-    val merges = graft.ops.Bpe.fitMemo(s, dir, bpeMerges)
+    val merges = bpeFit(s, dir)
     val v = graft.ops.Bpe.vocabAfter(
       graft.ops.Bpe.vocab0(Tables.documents(s, dir)), merges)
     v.select(col("word"), col("cnt"),
@@ -1229,7 +1236,7 @@ object TextQueries {
        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
        |  array_to_string(list(tid ORDER BY wp, tp), ',') AS token_ids
        |FROM seq GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    bpeTokenStream(Tables.documents(s, dir), graft.ops.Bpe.fitMemo(s, dir, bpeMerges))
+    bpeTokenStream(Tables.documents(s, dir), bpeFit(s, dir))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_tokens"),
         expr("array_join(transform(array_sort(collect_list(struct(wp, tp, tid))), x -> CAST(x.tid AS string)), ',')")
@@ -1396,7 +1403,7 @@ object TextQueries {
          |  CAST(sum(tid * ((o % $budget) + 1)) AS BIGINT) AS sig
          |FROM po GROUP BY shard, seq_id ORDER BY shard, seq_id""".stripMargin) { (s, dir) =>
       val toks = bpeTokenStream(Tables.documents(s, dir),
-        graft.ops.Bpe.fitMemo(s, dir, bpeMerges))
+        bpeFit(s, dir))
       packTokenStream(toks, budget, shards, salt = "pk2")
         .groupBy(col("shard"), col("seq_id"))
         .agg(count(lit(1)).cast("long").as("n_tokens"),

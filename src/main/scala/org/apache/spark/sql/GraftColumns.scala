@@ -50,4 +50,10 @@ object GraftColumns {
         cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ strategy
     }
   }
+
+  /** The session's own UUID (`private[sql]` on the classic session) —
+    * the session part of [[graft.ops.Artifacts]] keys.
+    */
+  def sessionId(spark: SparkSession): String =
+    spark.asInstanceOf[classic.SparkSession].sessionUUID
 }

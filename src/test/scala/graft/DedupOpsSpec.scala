@@ -109,12 +109,9 @@ class DedupOpsSpec extends SparkSpec {
       (5L, (1 to 30).map(i => s"beta$i").mkString(" "))).toDF("doc_id", "text")
     val tmp = java.nio.file.Files.createTempDirectory("cstats").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    spark.conf.set("spark.graft.dedup.shareSignatures", "false")
-    try {
-      val got = graft.queries.DedupQueries.dedupClusterStats.run(spark, tmp)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      assert(got === Seq((3L, 1L, 3L)), s"got $got")
-    } finally spark.conf.set("spark.graft.dedup.shareSignatures", "true")
+    val got = graft.queries.DedupQueries.dedupClusterStats.run(spark, tmp)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got === Seq((3L, 1L, 3L)), s"got $got")
   }
 
   test("dedup_lsh_recall: identical docs are always surfaced (recall 1), counts reconcile") {
@@ -130,15 +127,12 @@ class DedupOpsSpec extends SparkSpec {
       (5L, (1 to 30).map(i => s"beta$i").mkString(" "))).toDF("doc_id", "text")
     val tmp = java.nio.file.Files.createTempDirectory("lshrec").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    spark.conf.set("spark.graft.dedup.shareSignatures", "false")
-    try {
-      val r = graft.queries.DedupQueries.dedupLshRecall.run(spark, tmp).head()
-      assert(r.getAs[Long]("n_true") === 3L)
-      assert(r.getAs[Long]("n_hit") === 3L)
-      assert(r.getAs[Double]("recall") === 1.0)
-      assert(r.getAs[Long]("n_cand") >= 3L)
-      assert(r.getAs[Double]("precision") > 0.0 && r.getAs[Double]("precision") <= 1.0)
-    } finally spark.conf.set("spark.graft.dedup.shareSignatures", "true")
+    val r = graft.queries.DedupQueries.dedupLshRecall.run(spark, tmp).head()
+    assert(r.getAs[Long]("n_true") === 3L)
+    assert(r.getAs[Long]("n_hit") === 3L)
+    assert(r.getAs[Double]("recall") === 1.0)
+    assert(r.getAs[Long]("n_cand") >= 3L)
+    assert(r.getAs[Double]("precision") > 0.0 && r.getAs[Double]("precision") <= 1.0)
   }
 
   test("text_winnowing: the w+k-1 guarantee — docs sharing a long run share a fingerprint") {

@@ -370,16 +370,15 @@ class PlanSpec extends SparkSpec {
     // PRE-checkpoint optimized plan — so a query returning (or
     // internally materializing) a checkpoint can no longer hide an
     // unpartitioned window behind the LogicalRDD scan.
-    // fresh scratch namespace (r12 advice): Scratch.once memoizes
-    // artifact builds per JVM, so without a sweep-private salt any
-    // index query that ran earlier (the DPP tests, a same-JVM Verify)
-    // would skip its BUILD phase here and those checkpointed plans
-    // would escape the recording — the exact blind spot Ckpt.recording
-    // was added to close
+    // evict the session's artifacts first (r12 advice): artifacts are
+    // built once per session, so any index query that ran earlier (the
+    // DPP tests, a same-JVM Verify) would skip its BUILD phase here and
+    // those checkpointed plans would escape the recording — the exact
+    // blind spot Ckpt.recording was added to close
+    graft.ops.Artifacts.evict(spark)
     val offenders = graft.queries.Registry.all.flatMap { q =>
       val win = try {
-        val (frame, prePlans) = graft.ops.Scratch.withNamespace("sweep_window")(
-          graft.ops.Ckpt.recording(q.run(spark, dir)))
+        val (frame, prePlans) = graft.ops.Ckpt.recording(q.run(spark, dir))
         Right((frame.queryExecution.optimizedPlan +: prePlans).flatMap(_.collect {
           case w: org.apache.spark.sql.catalyst.plans.logical.Window
               if w.partitionSpec.isEmpty => w
