@@ -23,8 +23,7 @@ object CorpusMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: CorpusMain <docs.jsonl> <outDir> [--force] | CorpusMain --append <batch.jsonl> <outDir>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
+    val cpus = SparkEntry.localCpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -22,8 +22,8 @@ object PipeBench {
       i += 1
     }
     w.close()
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkSession.builder().master(s"local[${SparkEntry.localCpus}]")
+      .config("spark.sql.shuffle.partitions", SparkEntry.localCpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

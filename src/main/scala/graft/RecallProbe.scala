@@ -38,8 +38,8 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkSession.builder().master(s"local[${SparkEntry.localCpus}]")
+      .config("spark.sql.shuffle.partitions", SparkEntry.localCpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

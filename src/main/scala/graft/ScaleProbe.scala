@@ -21,8 +21,8 @@ object ScaleProbe {
     val legsEnv = sys.env.get("SPARK_GRAFT_PROBE_LEGS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def on(l: String): Boolean = legsEnv.forall(_.contains(l))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkSession.builder().master(s"local[${SparkEntry.localCpus}]")
+      .config("spark.sql.shuffle.partitions", SparkEntry.localCpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -20,8 +20,8 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 2000000
     val hotShare = if (args.length > 1) args(1).toDouble else 0.3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkSession.builder().master(s"local[${SparkEntry.localCpus}]")
+      .config("spark.sql.shuffle.partitions", SparkEntry.localCpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

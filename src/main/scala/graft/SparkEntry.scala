@@ -6,6 +6,12 @@ import graft.queries.Registry
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
+  /** The local core count every main runs at: `SPARK_GRAFT_CPUS`, else
+    * the host's cores capped at 32 (also the shuffle partition count).
+    */
+  def localCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    math.min(32, Runtime.getRuntime.availableProcessors).toString)
+
   /** Flagship: A5 forward-window target over sf0.001 events (>0 rows). */
   def entry(spark: SparkSession): DataFrame =
     graft.ops.WindowOps.forwardWindowCount(

@@ -15,7 +15,7 @@ import org.apache.spark.scheduler._
 object TailProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SparkEntry.localCpus
     val names = args.headOption.map(_.split(",").toSeq).getOrElse(Seq("q1_agg"))
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val spark = SparkSession.builder()

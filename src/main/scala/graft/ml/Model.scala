@@ -24,8 +24,7 @@ trait TrainedModel {
 trait ModelFamily {
   def name: String
   /** Concrete MLlib model class this family persists — drives
-    * [[Models.savedFamily]]'s metadata match, so new families get the
-    * load-not-refit checkpoint behavior without touching Models.
+    * [[Models.savedFamily]]'s metadata match.
     */
   def modelClassName: String
   def fit(assembled: DataFrame): TrainedModel
@@ -77,9 +76,7 @@ object Models {
   /** Which family wrote a saved model, matched registry-driven against
     * MLlib's metadata JSON (`"class":"<modelClassName>"` — the full
     * quoted path disambiguates LinearRegressionModel from
-    * GeneralizedLinearRegressionModel). Guards the pipeline's load path
-    * against a config change pointing a different family's loader at a
-    * stale directory.
+    * GeneralizedLinearRegressionModel).
     */
   def savedFamily(spark: org.apache.spark.sql.SparkSession, path: String): Option[String] = {
     val meta = spark.read.text(s"$path/metadata").collect().map(_.getString(0)).mkString

@@ -17,8 +17,8 @@ import org.apache.spark.storage.StorageLevel
   * KEY = (session, input fingerprint, build params):
   *  - the session's own UUID, so no artifact outlives or crosses it;
   *  - (path, length, mtime) of every file under `$dir/<table>.parquet`
-  *    for each table the build reads, from a Hadoop FileSystem listing
-  *    of each table — an input rewritten in place within the session (new
+  *    for each table the build reads ([[graft.core.Fs.fingerprint]], one
+  *    Hadoop FileSystem listing per table) — an input rewritten in place within the session (new
   *    part files, or a new length / mtime) MISSES instead of serving the
   *    old snapshot's artifact. The first miss over a new snapshot also
   *    evicts every artifact of the session built over the old one:
@@ -86,24 +86,6 @@ object Artifacts {
   private val inFlight = ThreadLocal.withInitial(() => scala.collection.mutable.Set[Key]())
   @volatile private var observer: Event => Unit = _ => ()
 
-  /** (path, length, mtime) of every file under `table`; a missing table
-    * fingerprints as (path, -1, -1). `listStatus`, not `listFiles`: on
-    * the local FileSystem a LocatedFileStatus loads each file's
-    * permissions by forking `ls` (measured 3-7 ms per table against
-    * 16-100 µs), and this runs on every artifact lookup, hits included.
-    */
-  private def fingerprint(s: SparkSession, table: String): Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(table)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def walk(p: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
-      fs.listStatus(p).toSeq.flatMap { f =>
-        if (f.isDirectory) walk(f.getPath)
-        else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-    try walk(p).sorted
-    catch { case _: java.io.FileNotFoundException => Seq((p.toString, -1L, -1L)) }
-  }
-
   /** A persisted frame built from the `tables` of `dir`. Callers must
     * NOT unpersist it.
     */
@@ -144,7 +126,9 @@ object Artifacts {
 
   private def key(s: SparkSession, dir: String, tables: Seq[String], kind: String,
                   params: Seq[Any]): Key = {
-    val inputs = tables.map { t => val path = s"$dir/$t.parquet"; path -> fingerprint(s, path) }
+    val inputs = tables.map { t =>
+      val path = s"$dir/$t.parquet"; path -> graft.core.Fs.fingerprint(s, path)
+    }
     Key(sessionId(s), kind, inputs, params)
   }
 

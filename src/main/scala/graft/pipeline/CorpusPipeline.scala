@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
-import graft.core.{Fs, Ingest, Sinks}
+import graft.core.{Fs, Ingest, Json, Sinks}
 import graft.ops.{Ckpt, IvfIndex, TextOps}
 import graft.queries.{DedupQueries, MlQueries}
 
@@ -15,9 +15,9 @@ import graft.queries.{DedupQueries, MlQueries}
   * clusterSplitAssign, mixtureEpochsFrame, epochOrderStableFrame), so stage
   * output ≡ gate-query output is a SPEC (CorpusPipelineSpec), not a
   * hope. Structural analog of the bicis [[Pipeline]] (reference
-  * build_dataset.py:46-53's Luigi chain): parquet stage targets with
-  * exists-skip, a config fingerprint that invalidates a stale outDir,
-  * and an S8 fails/census sidecar per lossy stage.
+  * build_dataset.py:46-53's Luigi chain): parquet stage targets keyed
+  * by their inputs and params ([[Stages]]), and an S8 fails/census
+  * sidecar per lossy stage, written as part of its stage.
   *
   * Stage DAG (all parquet-checkpointed under outDir):
   *
@@ -56,7 +56,9 @@ import graft.queries.{DedupQueries, MlQueries}
   *               eval readers, row-group-skippable on the visit order
   *
   * INCREMENTAL MODE ([[append]]): a daily batch lands as DELTA stages
-  * under `batches/<tag>/` (docs/funnel/kept/digests/signatures/pairs —
+  * under `batches/<tag>/` (the tag is a digest of the batch file's
+  * fingerprint, so a batch rewritten in place is a new batch;
+  * docs/funnel/kept/digests/signatures/pairs —
   * all batch-scaled: the funnel's exact tier joins the persisted digest
   * state, the pair delta band-joins the batch's signatures against the
   * persisted signature table), committed atomically to `appends.tsv`,
@@ -140,96 +142,120 @@ object CorpusPipeline {
     Fs.writeString(spark, appendsPath(outDir), prev + s"$tag\t$path\n")
   }
 
-  private[graft] def batchTag(batchJsonlPath: String): String = {
+  /** A batch's directory name: a digest of its input fingerprint, so a
+    * batch rewritten at the same path after it was committed is a NEW
+    * batch, never skipped as "already applied".
+    */
+  private[graft] def batchTag(batchJsonlPath: String,
+                              spark: SparkSession = SparkSession.active): String = {
     val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(batchJsonlPath.getBytes("UTF-8"))
+      .digest(Fs.fingerprint(spark, batchJsonlPath).toString.getBytes("UTF-8"))
     d.take(6).map(b => f"$b%02x").mkString
   }
 
-  /** Base stage ∪ committed batch deltas of the same stage name. */
-  private def mergedStage(spark: SparkSession, outDir: String, name: String,
-                          tags: Seq[String]): DataFrame =
-    tags.foldLeft(spark.read.parquet(s"$outDir/$name")) { (df, t) =>
-      df.unionByName(spark.read.parquet(s"${batchDir(outDir, t)}/$name"))
+  // ---------------- base and batch areas ----------------
+
+  /** The stages every area holds — the base outDir, or one committed
+    * batch's delta dir — plus its input line count.
+    */
+  private final case class Area(docs: Stage, funnel: Stage, kept: Stage,
+                                digests: Stage, signatures: Stage, pairs: Stage,
+                                nRaw: Long) {
+    def stages: Seq[Stage] = Seq(docs, funnel, kept, digests, signatures, pairs)
+  }
+
+  private object Area {
+    private val names = Seq("docs", "funnel", "kept", "digests", "signatures", "pairs")
+
+    def apply(spark: SparkSession, dir: String, s: Seq[Stage]): Area =
+      Area(s(0), s(1), s(2), s(3), s(4), s(5), Json.field(
+        Fs.readString(spark, s"$dir/ingest_census.json"), "input_lines").get.toLong)
+
+    /** The area of `dir` as its manifests record it; None unless every
+      * stage committed.
+      */
+    def committed(spark: SparkSession, dir: String): Option[Area] = {
+      val st = new Stages(spark, dir)
+      val s = names.flatMap(st.committed)
+      if (s.size == names.size) Some(apply(spark, dir, s)) else None
     }
+  }
+
+  /** The pairs stage's params, in [[run]] and in [[append]]'s check. */
+  private def pairParams(cfg: CorpusConfig): Seq[Any] = Seq(cfg.tau)
 
   // ---------------- shared stage bodies ----------------
 
-  /** JSONL → typed docs stage + census sidecars under `areaDir` (the
-    * base outDir or a batch delta dir). Returns (docs, rawLineCount).
-    * One PERMISSIVE-read line count serves the census AND the result
-    * (r9 ADVICE: a second spark.read.text pass counted physical lines —
-    * blank lines included — and could disagree); a warm re-run reads
-    * the persisted count instead of re-scanning the input.
+  /** JSONL → typed docs stage + its ingest census sidecar. One
+    * PERMISSIVE read counts the input lines (an observation on the
+    * stage's own write job — r9 ADVICE: a second spark.read.text pass
+    * counted physical lines, blank lines included, and could disagree).
     */
-  private def ingestStages(spark: SparkSession, jsonlPath: String,
-                           areaDir: String, force0: Boolean): (DataFrame, Long) = {
-    val raw = Ingest.readJsonl(spark, jsonlPath, docSchema).cache()
-    val docs = Pipeline.stage(spark, s"$areaDir/docs", force0) {
-      raw.where(col("_corrupt").isNull &&
-          col("doc_id").isNotNull && col("text").isNotNull)
+  private def ingest(spark: SparkSession, stages: Stages, jsonlPath: String): Stage = {
+    val lines = Observation()
+    stages.parquet("docs", inputs = Seq(jsonlPath), sidecar = docs => {
+      val nRaw = lines.get("n").asInstanceOf[Long]
+      Fs.writeString(spark, stages.path("ingest_census.json"),
+        s"""{"input_lines": $nRaw, "parsed_docs": ${docs.rows}, "quarantined": ${nRaw - docs.rows}}""")
+    }) {
+      Ingest.readJsonl(spark, jsonlPath, docSchema).observe(lines, count(lit(1)).as("n"))
+        .where(col("_corrupt").isNull && col("doc_id").isNotNull && col("text").isNotNull)
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
           coalesce(col("n_chars"), length(col("text")).cast("long")).as("n_chars"))
     }
-    val rawCountPath = s"$areaDir/raw_count"
-    val nRaw =
-      if (!force0 && Fs.exists(spark, rawCountPath))
-        Fs.readString(spark, rawCountPath).trim.toLong
-      else {
-        val n = raw.count()
-        Fs.writeString(spark, rawCountPath, n.toString); n
-      }
-    val censusPath = s"$areaDir/ingest_census.json"
-    if (force0 || !Fs.exists(spark, censusPath)) {
-      val nDocs = docs.count()
-      Fs.writeString(spark, censusPath,
-        s"""{"input_lines": $nRaw, "parsed_docs": $nDocs, "quarantined": ${nRaw - nDocs}}""")
-    }
-    raw.unpersist()
-    (docs, nRaw)
   }
-
-  private def derivedFpOf(fingerprint: String, tags: Seq[String]): String =
-    fingerprint + "|" + tags.mkString(",")
 
   /** The id-sized derived tier (clusters → canonical → survivors →
     * split → mixture → epoch order → corpus → shards) over the MERGED
-    * kept/pairs views — shared verbatim by [[run]] and [[append]], which
-    * is exactly why run-then-append ≡ full-rerun: everything downstream
-    * of the pair set recomputes from the same merged inputs. Returns
-    * (splitCounts, nSurvivors, nClusters).
+    * views of the base and every committed batch — shared verbatim by
+    * [[run]] and [[append]], which is exactly why run-then-append ≡
+    * full-rerun: everything downstream of the pair set recomputes from
+    * the same merged inputs. Every stage here depends on the areas'
+    * stages, so an append rebuilds the tier; the freeze-mode tokenizer
+    * depends on the base area and the config alone, so an append does
+    * not retrain it and a config change still does.
     */
-  /** `forceBase` = a config-change / explicit force (run's force0), as
-    * opposed to the append-driven derived-fingerprint force folded into
-    * `forceD`: freeze-mode stages are exempt from the LATTER only — a
-    * config change must still retrain the frozen tokenizer and rewrite
-    * the packed layout, or the stale-experiment fingerprint guard is
-    * defeated (r16 review).
-    */
-  private def deriveTier(spark: SparkSession, outDir: String, cfg: CorpusConfig,
-                         kept: DataFrame, hs: DataFrame,
-                         clusters0: => DataFrame,
-                         forceD: Boolean,
-                         forceBase: Boolean): (Map[String, Long], Long, Long) = {
-    def p(name: String) = s"$outDir/$name"
-    // clusters0 is caller-supplied BY NAME (evaluated only when the
-    // stage actually recomputes): run() passes the full CC over the
-    // pair set; append passes Components.mergeBatch over the PERSISTED
-    // prior map + the batch pair deltas — batch-sized cluster
-    // maintenance, proved ≡ full CC by ComponentsSpec and the
-    // dedup_clusters_incremental gate row
-    val clusters = Pipeline.stage(spark, p("clusters"), forceD)(clusters0)
-    val canonical = Pipeline.stage(spark, p("canonical"), forceD)(
-      DedupQueries.bestSurvivors(clusters, kept))
-    val survivors = Pipeline.stage(spark, p("survivors"), forceD) {
+  private def derive(spark: SparkSession, outDir: String, cfg: CorpusConfig,
+                     force: Boolean, base: Area): CorpusResult = {
+    val stages = new Stages(spark, outDir, force)
+    def p(name: String) = stages.path(name)
+    val batches = appliedBatches(spark, outDir).map { case (tag, path) =>
+      Area.committed(spark, batchDir(outDir, tag)).getOrElse(throw new IllegalStateException(
+        s"committed batch $path has no complete stages under ${batchDir(outDir, tag)}"))
+    }
+    val areas = base +: batches
+    def merged(f: Area => Stage): DataFrame = areas.map(a => f(a).df).reduce(_ unionByName _)
+    val kept = merged(_.kept)
+    val hs = merged(_.signatures)
+    val basis = areas.flatMap(a => Seq(a.kept, a.signatures, a.pairs))
+
+    // with no batches: the full CC over the pair set. With batches:
+    // incremental cluster maintenance — Components.mergeBatch over the
+    // PERSISTED prior map (localCheckpoint first: the stage overwrites
+    // the path it reads) + every committed batch's pair delta, proved
+    // ≡ full CC by ComponentsSpec and the dedup_clusters_incremental
+    // gate row. mergeBatch is idempotent for already-merged edges, so
+    // replaying ALL deltas is crash-safe whichever derive last committed.
+    val clusters = stages.parquet("clusters", Seq(cfg.tau), basis) {
+      if (batches.isEmpty)
+        graft.ops.Components.connectedComponents(
+            base.pairs.df.where(col("sim") >= cfg.tau).select(col("i"), col("j")))
+          .select(col("node"), col("rep"))
+      else graft.ops.Components.mergeBatch(
+        spark.read.parquet(p("clusters")).transform(Ckpt.eager),
+        batches.map(_.pairs.df).reduce(_ unionByName _)
+          .where(col("sim") >= cfg.tau).select(col("i"), col("j")))
+    }
+    val canonical = stages.parquet("canonical", Nil, basis :+ clusters)(
+      DedupQueries.bestSurvivors(clusters.df, kept))
+    val survivors = stages.parquet("survivors", Nil, basis ++ Seq(clusters, canonical),
+        sidecar = sv => Sinks.failsReport(kept, sv.df, "doc_id", p("fails_survivors.json"))) {
       // drop non-canonical cluster members; singletons pass through
-      val drop = clusters.join(
-          canonical.select(col("best_doc")), col("node") === col("best_doc"), "left_anti")
+      val drop = clusters.df.join(
+          canonical.df.select(col("best_doc")), col("node") === col("best_doc"), "left_anti")
         .select(col("node").as("doc_id"))
       kept.join(drop, Seq("doc_id"), "left_anti")
     }
-    if (forceD || !Fs.exists(spark, p("fails_survivors.json")))
-      Sinks.failsReport(kept, survivors, "doc_id", p("fails_survivors.json"))
 
     // ---- optional media/embedding dedup tiers (config-gated) ----
     // drop passes past the text near-dup tier, built from the SAME
@@ -241,27 +267,30 @@ object CorpusPipeline {
     val survivors2 = {
       var s2 = survivors
       if (cfg.phashDedup) {
-        val ppairs = Pipeline.stage(spark, p("phash_pairs"), forceD)(
-          graft.queries.EmbedQueries.phashDedupPairs(spark, s2))
-        s2 = Pipeline.stage(spark, p("phash_survivors"), forceD) {
+        val ppairs = stages.parquet("phash_pairs", Nil, Seq(s2))(
+          graft.queries.EmbedQueries.phashDedupPairs(spark, s2.df))
+        s2 = stages.parquet("phash_survivors", Nil, Seq(s2, ppairs)) {
           // min-id survivor per hamming cluster (the dedup_survivors policy)
           val drop = graft.ops.Components.connectedComponents(
-              ppairs.select(col("i"), col("j")))
+              ppairs.df.select(col("i"), col("j")))
             .where(col("node") =!= col("rep")).select(col("node").as("doc_id"))
-          s2.join(drop, Seq("doc_id"), "left_anti")
+          s2.df.join(drop, Seq("doc_id"), "left_anti")
         }
       }
       if (cfg.semanticDedup) {
         require(cfg.embeddingsPath.nonEmpty,
           "semanticDedup needs embeddingsPath (a (vec_id = doc_id, embedding) parquet)")
-        val v = spark.read.parquet(cfg.embeddingsPath)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          .join(s2.select(col("doc_id").as("vec_id")), "vec_id")
-        val k = math.ceil(math.sqrt(math.max(v.count(), 1L).toDouble)).toLong
-        val drops = Pipeline.stage(spark, p("semantic_drops"), forceD)(
-          graft.queries.EmbedQueries.semanticDedupFrame(v, k, cfg.semanticTau))
-        s2 = Pipeline.stage(spark, p("semantic_survivors"), forceD)(
-          s2.join(drops.select(col("vec_id").as("doc_id")), Seq("doc_id"), "left_anti"))
+        val in = s2
+        val drops = stages.parquet("semantic_drops", Seq(cfg.semanticTau), Seq(in),
+            inputs = Seq(cfg.embeddingsPath)) {
+          val v = spark.read.parquet(cfg.embeddingsPath)
+            .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+            .join(in.df.select(col("doc_id").as("vec_id")), "vec_id")
+          val k = math.ceil(math.sqrt(math.max(v.count(), 1L).toDouble)).toLong
+          graft.queries.EmbedQueries.semanticDedupFrame(v, k, cfg.semanticTau)
+        }
+        s2 = stages.parquet("semantic_survivors", Nil, Seq(in, drops))(
+          in.df.join(drops.df.select(col("vec_id").as("doc_id")), Seq("doc_id"), "left_anti"))
       }
       s2
     }
@@ -286,11 +315,11 @@ object CorpusPipeline {
         "annIndex/knnGraph need embeddingsPath (a (vec_id = doc_id, embedding) parquet)")
       val sv = spark.read.parquet(cfg.embeddingsPath)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .join(survivors2.select(col("doc_id").as("vec_id")), "vec_id")
+        .join(survivors2.df.select(col("doc_id").as("vec_id")), "vec_id")
       // survivors with NO embedding row cannot serve — that is a data
       // defect, not a silent shrink of the index: census it next to the
       // other fails reports so the gap is visible
-      val missing = survivors2.select(col("doc_id").as("vec_id"))
+      val missing = survivors2.df.select(col("doc_id").as("vec_id"))
         .join(sv.select(col("vec_id")), Seq("vec_id"), "left_anti").count()
       Fs.writeString(spark, p("fails_ann.json"),
         s"""{"survivors_missing_embedding": $missing}""")
@@ -308,22 +337,19 @@ object CorpusPipeline {
     // assignment is keyed on the cluster rep over the WHOLE kept corpus
     // (the fence is a property of the group, not of who survived), then
     // applied to survivors
-    val split = Pipeline.stage(spark, p("split"), forceD)(
-      DedupQueries.clusterSplitAssign(kept, clusters))
-    val splitCensusPath = p("split_census.json")
-    if (forceD || !Fs.exists(spark, splitCensusPath)) {
-      val rows = DedupQueries.clusterSplitCensus(split).orderBy(col("split")).collect()
-      Fs.writeString(spark, splitCensusPath,
+    val split = stages.parquet("split", Nil, basis :+ clusters, sidecar = sp => {
+      val rows = DedupQueries.clusterSplitCensus(sp.df).orderBy(col("split")).collect()
+      Fs.writeString(spark, p("split_census.json"),
         rows.map(r => s""""${r.getString(0)}": {"n_docs": ${r.getLong(1)}, "n_groups": ${r.getLong(2)}, "n_chars": ${r.getLong(3)}, "id_sum": ${r.getLong(4)}}""")
           .mkString("{", ", ", "}"))
-    }
+    })(DedupQueries.clusterSplitAssign(kept, clusters.df))
 
     // ---- tokenizer: BPE merge table trained on the shipped corpus's
     // TRAIN split only (the tokenizer is a trained artifact — letting it
     // see valid/test text is the same leak the cluster fence exists to
     // stop). Stage body IS Bpe.fit, the kernel text_bpe_merges gates.
     // Default mode: it lives in the derived tier, so append batches
-    // retrain it over the merged corpus via the derived fingerprint.
+    // retrain it over the merged corpus.
     // FREEZE mode (cfg.freezeTokenizer — r15 verdict §2): the tokenizer
     // trains ONCE, on the FIRST derive's train split, and later derives
     // reuse it — the production discipline (a tokenizer is versioned
@@ -332,23 +358,27 @@ object CorpusPipeline {
     // shift EVERY token id, forcing a 100% packed rewrite for a 0.1%
     // batch. Frozen mode also persists the COMPLETE id table
     // (alphabet ∪ merge outputs, fit-frequency ranked) so unseen-at-fit
-    // tokens in later batches still encode deterministically.
-    if (cfg.bpeMerges > 0) {
-      val tokForce = if (cfg.freezeTokenizer) forceBase else forceD
-      Pipeline.stage(spark, p("tokenizer"), tokForce) {
-        val trainDocs = survivors2.join(
-          split.where(col("split") === "train").select(col("doc_id")), "doc_id")
+    // tokens in later batches still encode deterministically: its key
+    // is the config and the BASE area's stages, never the batches.
+    def trainDocs = survivors2.df.join(
+      split.df.where(col("split") === "train").select(col("doc_id")), "doc_id")
+    val tokenizer = Option.when(cfg.bpeMerges > 0) {
+      val (params, deps) =
+        if (cfg.freezeTokenizer) (Seq(cfg), Seq(base.kept, base.signatures, base.pairs))
+        else (Seq(cfg.bpeMerges), Seq(survivors2, split))
+      stages.parquet("tokenizer", params, deps) {
         import spark.implicits._
         graft.ops.Bpe.fit(trainDocs, cfg.bpeMerges)
           .map(m => (m.rank.toLong, m.left, m.right, m.left + m.right, m.count))
           .toDF("rank", "left_sym", "right_sym", "merged", "pair_count")
       }
-      if (cfg.freezeTokenizer)
-        Pipeline.stage(spark, p("token_ids"), force = tokForce) {
-          val trainDocs = survivors2.join(
-            split.where(col("split") === "train").select(col("doc_id")), "doc_id")
-          graft.queries.TextQueries.bpeTokenIds(trainDocs, mergesOf(spark, outDir))
-        }
+    }
+    // a new id table invalidates the layout packed with the old one:
+    // dropping it routes the frozen packed tier to its full writer
+    val tokenIds = tokenizer.filter(_ => cfg.freezeTokenizer).map { tok =>
+      stages.parquet("token_ids", Nil, Seq(tok),
+          sidecar = _ => Fs.deleteRecursive(spark, p("packed_shards")))(
+        graft.queries.TextQueries.bpeTokenIds(trainDocs, mergesOf(spark, outDir)))
     }
 
     // ---- packed: the TRAINING-READY deliverable (r14 verdict §1) ----
@@ -369,43 +399,45 @@ object CorpusPipeline {
     val packedOpt = if (cfg.packBudget > 0) {
       require(cfg.bpeMerges > 0,
         "packBudget needs the trained tokenizer stage (set bpeMerges > 0)")
+      val packParams = Seq(cfg.packBudget, cfg.epochShards)
       if (cfg.freezeTokenizer)
-        Some(packedFrozen(spark, outDir, cfg, survivors2, split,
-          forceFull = forceBase))
+        Some(stages("packed_shards", packParams :+ cfg.maxRecordsPerFile,
+            Seq(survivors2, split) ++ tokenIds) {
+          packedFrozen(spark, outDir, cfg, survivors2.df, split.df); -1L
+        })
       else {
-        val packed = Pipeline.stage(spark, p("packed"), forceD) {
+        val packed = stages.parquet("packed", packParams, Seq(survivors2, split) ++ tokenizer) {
           val merges = mergesOf(spark, outDir)
-          val toks = graft.queries.TextQueries.bpeTokenStream(survivors2, merges)
-            .join(split.select(col("doc_id"), col("split")), "doc_id")
+          val toks = graft.queries.TextQueries.bpeTokenStream(survivors2.df, merges)
+            .join(split.df.select(col("doc_id"), col("split")), "doc_id")
           packSequences(graft.queries.TextQueries
             .packTokenStream(toks, cfg.packBudget, cfg.epochShards,
               salt = "pack", keyCols = Seq("split")), Seq("split"))
         }
-        val shardsPath = p("packed_shards")
-        if (forceD || !Fs.exists(spark, s"$shardsPath/_SUCCESS"))
-          Sinks.shardedParquet(packed, shardsPath,
+        stages("packed_shards", Seq(cfg.maxRecordsPerFile), Seq(packed)) {
+          Sinks.shardedParquet(packed.df, p("packed_shards"),
             partitionCols = Seq("split"), sortCols = Seq("shard", "seq_id"),
             maxRecordsPerFile = cfg.maxRecordsPerFile)
+          packed.rows
+        }
         Some(packed)
       }
     } else None
 
     // ---- mixture + epoch order over the final corpus ----
-    val mixture = Pipeline.stage(spark, p("mixture"), forceD)(
-      MlQueries.mixtureEpochsFrame(survivors2, cfg.budgetTokens))
-    if (forceD || !Fs.exists(spark, p("mixture.json"))) {
-      val rows = mixture.orderBy(col("source")).collect()
+    stages.parquet("mixture", Seq(cfg.budgetTokens), Seq(survivors2), sidecar = mx => {
+      val rows = mx.df.orderBy(col("source")).collect()
       Fs.writeString(spark, p("mixture.json"),
         rows.map(r => s""""${r.getString(0)}": {"n_tokens": ${r.getLong(1)}, "share": ${r.getDouble(2)}, "epochs": ${r.getDouble(3)}}""")
           .mkString("{", ", ", "}"))
-    }
+    })(MlQueries.mixtureEpochsFrame(survivors2.df, cfg.budgetTokens))
     // append-STABLE visit order (≡ ml_epoch_order_stable): pos is the
     // sparse permutation key, so an appended batch never shifts an
     // existing doc's (shard, pos) — the precondition for the
     // incremental shard write below (a dense rank reshuffles ~half of
     // every shard per insert and forces a wholesale rewrite)
-    val order = Pipeline.stage(spark, p("epoch_order"), forceD)(
-      MlQueries.epochOrderStableFrame(survivors2, cfg.epochSeed, cfg.epochShards))
+    val order = stages.parquet("epoch_order", Seq(cfg.epochSeed, cfg.epochShards), Seq(survivors2))(
+      MlQueries.epochOrderStableFrame(survivors2.df, cfg.epochSeed, cfg.epochShards))
 
     // ---- dataset card: the release-notes sidecar composing the
     // validation gate (ml_constraint_audit's plan over the SHIPPED
@@ -415,19 +447,20 @@ object CorpusPipeline {
     // made visible) and the top cross-source shingle-overlap pairs
     // (dedup_source_overlap's plan off the persisted signature table —
     // which FEEDS still duplicate each other after dedup) ----
-    if (forceD || !Fs.exists(spark, p("dataset_card.json"))) {
-      val cons = MlQueries.constraintAuditFrame(survivors2).orderBy(col("con"))
+    stages("dataset_card", Nil, (basis :+ survivors2) ++ packedOpt) {
+      val sv = survivors2.df
+      val cons = MlQueries.constraintAuditFrame(sv).orderBy(col("con"))
         .collect().map(r => s""""${r.getString(0)}": {"metric": ${r.getDouble(1)}, "pass": ${r.getBoolean(2)}}""")
-      val rates = DedupQueries.dedupRateBySourceFrame(survivors2).orderBy(col("source"))
+      val rates = DedupQueries.dedupRateBySourceFrame(sv).orderBy(col("source"))
         .collect().map(r => s""""${r.getString(0)}": {"n_docs": ${r.getLong(1)}, "dup_rate": ${r.getDouble(4)}, "n_cross": ${r.getLong(5)}}""")
       val overlap = DedupQueries.sourceOverlapPairs(
-          hs.join(survivors2.select(col("doc_id")), "doc_id"), survivors2)
+          hs.join(sv.select(col("doc_id")), "doc_id"), sv)
         .orderBy(col("jaccard").desc, col("sa"), col("sb")).limit(5).collect()
         .map(r => s"""{"sa": ${graft.core.Json.quote(r.getString(0))}, "sb": ${graft.core.Json.quote(r.getString(1))}, "jaccard": ${r.getDouble(3)}}""")
       // token census of the shipped packed artifact (≤3 rows) — the
       // number a training run budgets against
       val packedJson = packedOpt.fold("") { pk =>
-        val rows = pk.groupBy(col("split"))
+        val rows = pk.df.groupBy(col("split"))
           .agg(count(lit(1)).as("n_sequences"), sum(col("n_tokens")).as("n_tokens"))
           .orderBy(col("split")).collect()
           .map(r => s""""${r.getString(0)}": {"n_sequences": ${r.getLong(1)}, "n_tokens": ${r.getLong(2)}}""")
@@ -435,32 +468,35 @@ object CorpusPipeline {
       }
       Fs.writeString(spark, p("dataset_card.json"),
         s"""{"constraints": ${cons.mkString("{", ", ", "}")}, "dup_rate_by_source": ${rates.mkString("{", ", ", "}")}, "top_source_overlap": ${overlap.mkString("[", ", ", "]")}$packedJson}""")
+      -1L
     }
 
     // ---- final corpus + sharded training layout ----
-    val corpus = Pipeline.stage(spark, p("corpus"), forceD)(
-      survivors2
-        .join(split.select(col("doc_id"), col("split")), "doc_id")
-        .join(order, "doc_id"))
-    val shardsPath = p("shards")
-    if (forceD || !Fs.exists(spark, s"$shardsPath/_SUCCESS")) {
+    val corpus = stages.parquet("corpus", Nil, Seq(survivors2, split, order))(
+      survivors2.df
+        .join(split.df.select(col("doc_id"), col("split")), "doc_id")
+        .join(order.df, "doc_id"))
+    stages("shards", Seq(cfg.maxRecordsPerFile), Seq(corpus)) {
       // INCREMENTAL on re-derives: only (split, source) partitions whose
       // content changed rewrite (the id-sized diff inside the sink);
       // correct because every non-projected column is doc_id-determined
       // and the visit order above is append-stable. First derive falls
       // back to the full writer.
       val tS = System.nanoTime()
-      val touched = Sinks.shardedParquetIncremental(corpus, shardsPath,
+      val touched = Sinks.shardedParquetIncremental(corpus.df, p("shards"),
         partitionCols = Seq("split", "source"), sortCols = Seq("shard", "pos"),
         keyCol = "doc_id", maxRecordsPerFile = cfg.maxRecordsPerFile)
       if (spark.conf.get("spark.graft.ann.log", "false").toBoolean)
         System.err.println(f"[shards.incremental] partitions_rewritten=$touched " +
           f"wall=${(System.nanoTime() - tS) / 1e9}%.2f s")
+      corpus.rows
     }
 
-    val splitCounts = split.groupBy(col("split")).count()
+    val splitCounts = split.df.groupBy(col("split")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    (splitCounts, survivors2.count(), canonical.count())
+    CorpusResult(nRaw = areas.map(_.nRaw).sum, nDocs = areas.map(_.docs.rows).sum,
+      nKept = areas.map(_.kept.rows).sum, nSurvivors = survivors2.rows,
+      nClusters = canonical.rows, splitCounts = splitCounts)
   }
 
   private def mergesOf(spark: SparkSession, outDir: String): Seq[graft.ops.Bpe.Merge] =
@@ -512,7 +548,7 @@ object CorpusPipeline {
     */
   private def packedFrozen(spark: SparkSession, outDir: String,
                            cfg: CorpusConfig, survivors2: DataFrame,
-                           split: DataFrame, forceFull: Boolean): DataFrame = {
+                           split: DataFrame): Unit = {
     def p(name: String) = s"$outDir/$name"
     val shardsPath = p("packed_shards")
     val merges = mergesOf(spark, outDir)
@@ -528,10 +564,10 @@ object CorpusPipeline {
         keyCols = Seq("split", "source")), Seq("split", "source"))
     }
     def pcolS(c: Column) = nullif(c.cast("string"), lit(""))
-    // forceFull: a config change re-shapes every sequence (budget,
-    // shards, merges all changed under us) — the membership diff is
-    // blind to that, so route to the full writer
-    val prevOpt = if (forceFull || !Fs.exists(spark, s"$shardsPath/_SUCCESS")) None else
+    // no committed layout — a first derive, a crash mid-patch, or a new
+    // id table (the token_ids stage drops the layout: the membership
+    // diff is blind to re-shaped sequences) — routes to the full writer
+    val prevOpt = if (!Fs.exists(spark, s"$shardsPath/_SUCCESS")) None else
       try {
         val prev = spark.read.parquet(shardsPath)
           .select(pcolS(col("split")).as("split"),
@@ -578,14 +614,8 @@ object CorpusPipeline {
               f"wall=${(System.nanoTime() - tS) / 1e9}%.2f s")
         }
     }
-    spark.read.parquet(shardsPath)
   }
 
-  /** Rederive-and-report over the CURRENT committed state (base + all
-    * applied batches): recompute the derived tier iff the derived
-    * fingerprint doesn't match the applied-batch list, then assemble the
-    * merged CorpusResult.
-    */
   /** Reconcile the persisted IVF index at `root` to hold EXACTLY the
     * ids of `sv` (vec_id, v). First touch builds; later calls diff the
     * live set against sv (one index read + one sv pass — the comparison
@@ -856,121 +886,46 @@ object CorpusPipeline {
     }
   }
 
-  private def mergedResult(spark: SparkSession, outDir: String, cfg: CorpusConfig,
-                           fingerprint: String): CorpusResult = {
-    def p(name: String) = s"$outDir/$name"
-    val tags = appliedBatches(spark, outDir).map(_._1)
-    val want = derivedFpOf(fingerprint, tags)
-    val dfpPath = p("derived.fingerprint")
-    val forceD = !Fs.exists(spark, dfpPath) || Fs.readString(spark, dfpPath) != want
-    val docs = mergedStage(spark, outDir, "docs", tags)
-    val kept = mergedStage(spark, outDir, "kept", tags)
-    val hs = mergedStage(spark, outDir, "signatures", tags)
-    // incremental cluster maintenance: merge every committed batch's
-    // pair delta into the PERSISTED cluster map (localCheckpoint first
-    // — the stage will overwrite the path it was read from).
-    // mergeBatch is idempotent for already-merged edges, so replaying
-    // ALL deltas is crash-safe regardless of which rederive last
-    // committed; with no batches this is the base map unchanged.
-    def clusters0: DataFrame =
-      if (tags.isEmpty) spark.read.parquet(s"$outDir/clusters")
-      else {
-        val prior = spark.read.parquet(s"$outDir/clusters").transform(graft.ops.Ckpt.eager)
-        val deltas = tags.map(t => spark.read.parquet(s"${batchDir(outDir, t)}/pairs"))
-          .reduce(_.unionByName(_))
-          .where(col("sim") >= cfg.tau).select(col("i"), col("j"))
-        graft.ops.Components.mergeBatch(prior, deltas)
-      }
-    if (forceD) Fs.delete(spark, dfpPath)
-    val (splitCounts, nSurv, nClus) = deriveTier(spark, outDir, cfg, kept, hs,
-      clusters0, forceD, forceBase = false)
-    Fs.writeString(spark, dfpPath, want)
-    val nRaw = (s"$outDir" +: tags.map(batchDir(outDir, _)))
-      .map(d => Fs.readString(spark, s"$d/raw_count").trim.toLong).sum
-    CorpusResult(nRaw = nRaw, nDocs = docs.count(), nKept = kept.count(),
-      nSurvivors = nSurv, nClusters = nClus, splitCounts = splitCounts)
-  }
-
   // ---------------- batch build ----------------
 
   def run(spark: SparkSession, jsonlPath: String, outDir: String,
           cfg: CorpusConfig = CorpusConfig(), force: Boolean = false): CorpusResult = {
-    new java.io.File(outDir).mkdirs()
-    def p(name: String) = s"$outDir/$name"
     TextOps.ensureFunctions(spark)
-
-    // same stale-experiment guard as Pipeline.run: a config change
-    // against an existing outDir recomputes instead of serving stale
-    // targets. Crash discipline (r9 ADVICE): a missing fingerprint next
-    // to an existing docs stage means a run DIED before committing —
-    // its checkpoints may belong to any config, so force; and a FORCED
-    // run deletes the old fingerprint up front, so if IT crashes
-    // mid-way the retry forces again instead of serving the
-    // half-recomputed mix. The new fingerprint commits only on success.
-    val cfgPath = p("config.fingerprint")
-    val fingerprint = (cfg, jsonlPath).toString
-    val force0 = force ||
-      (if (Fs.exists(spark, cfgPath))
-         Fs.readString(spark, cfgPath) != fingerprint
-       else Fs.exists(spark, p("docs")))
-    if (force0) Fs.delete(spark, cfgPath)
-
-    // committed appends are part of this outDir's state: an unforced
-    // re-run serves the MERGED corpus (idempotent ensure); a forced run
-    // clears them — batch deltas were built against the old base
-    val applied = appliedBatches(spark, outDir)
-    if (applied.nonEmpty) {
-      if (force0) {
-        Fs.delete(spark, appendsPath(outDir))
-        Fs.deleteRecursive(spark, s"$outDir/batches")
-      } else return mergedResult(spark, outDir, cfg, fingerprint)
-    }
+    val stages = new Stages(spark, outDir, force)
+    def p(name: String) = stages.path(name)
 
     // ---- ingest (F4: corrupt lines quarantined, not fatal) ----
-    val (docs, nRawCount) = ingestStages(spark, jsonlPath, outDir, force0)
+    val docs = ingest(spark, stages, jsonlPath)
 
     // ---- quality funnel (≡ ml_quality_funnel) ----
-    val funnel = Pipeline.stage(spark, p("funnel"), force0)(
-      MlQueries.qualityFunnelFlags(docs))
-    val kept = Pipeline.stage(spark, p("kept"), force0)(
-      docs.join(funnel.where(col("keep") === 1).select(col("doc_id")), "doc_id"))
-    if (force0 || !Fs.exists(spark, p("fails_kept.json")))
-      Sinks.failsReport(docs, kept, "doc_id", p("fails_kept.json"))
+    val funnel = stages.parquet("funnel", deps = Seq(docs))(
+      MlQueries.qualityFunnelFlags(docs.df))
+    val kept = stages.parquet("kept", deps = Seq(docs, funnel),
+        sidecar = k => Sinks.failsReport(docs.df, k.df, "doc_id", p("fails_kept.json")))(
+      docs.df.join(funnel.df.where(col("keep") === 1).select(col("doc_id")), "doc_id"))
 
     // ---- persisted dedup state: digest + signature tables ----
     // digests: the exact-tier state append batches check against.
     // signatures: the per-snapshot signature table every dedup pass
     // (and every future append) reuses — built ONCE per doc, never
     // re-shingled
-    val digests = Pipeline.stage(spark, p("digests"), force0)(
-      docs.select(col("doc_id"), md5(col("text")).as("dg")))
-    locally { val _ = digests } // materialized for append; unused here
-    val hs = Pipeline.stage(spark, p("signatures"), force0)(
-      DedupQueries.hashesOfDocs(spark, kept))
-    val pairs = Pipeline.stage(spark, p("pairs"), force0)(
-      DedupQueries.minhashVerifiedPairs(hs, cfg.tau))
+    val digests = stages.parquet("digests", deps = Seq(docs))(
+      docs.df.select(col("doc_id"), md5(col("text")).as("dg")))
+    val hs = stages.parquet("signatures", deps = Seq(kept))(
+      DedupQueries.hashesOfDocs(spark, kept.df))
+    val pairs = stages.parquet("pairs", pairParams(cfg), Seq(hs))(
+      DedupQueries.minhashVerifiedPairs(hs.df, cfg.tau))
+    val base = Area(spark, outDir, Seq(docs, funnel, kept, digests, hs, pairs))
 
-    // ---- derived tier (shared with append) ----
-    val want = derivedFpOf(fingerprint, Seq.empty)
-    val dfpPath = p("derived.fingerprint")
-    val forceD = force0 ||
-      !Fs.exists(spark, dfpPath) || Fs.readString(spark, dfpPath) != want
-    if (forceD) Fs.delete(spark, dfpPath)
-    def clusters0: DataFrame =
-      graft.ops.Components.connectedComponents(
-          pairs.where(col("sim") >= cfg.tau).select(col("i"), col("j")))
-        .select(col("node"), col("rep"))
-    val (splitCounts, nSurv, nClus) = deriveTier(spark, outDir, cfg, kept, hs,
-      clusters0, forceD, forceBase = force0)
-    Fs.writeString(spark, dfpPath, want)
-
-    graft.core.Fs.writeString(spark, cfgPath, fingerprint)
-
-    CorpusResult(
-      nRaw = nRawCount,
-      nDocs = docs.count(), nKept = kept.count(),
-      nSurvivors = nSurv, nClusters = nClus,
-      splitCounts = splitCounts)
+    // committed appends are part of this outDir's state: an unchanged
+    // base serves the MERGED corpus (idempotent ensure); a rebuilt one
+    // (a forced run, a new input, a new tau) clears them — batch deltas
+    // were built against the old base
+    if (base.stages.exists(_.built)) {
+      Fs.delete(spark, appendsPath(outDir))
+      Fs.deleteRecursive(spark, s"$outDir/batches")
+    }
+    derive(spark, outDir, cfg, force, base)
   }
 
   /** INCREMENTAL append — merge a new JSONL batch into a completed
@@ -981,67 +936,65 @@ object CorpusPipeline {
     * and the id-sized derived tier recomputes over the merged views.
     * Result ≡ a full [[run]] over base ∪ batch (CorpusPipelineSpec).
     *
-    * Idempotent and resumable: delta stages use the same target-exists
-    * skip as everything else; an already-committed batch short-circuits
-    * to the merged report. Precondition (checked): every batch doc_id
-    * strictly exceeds every committed doc_id.
+    * Idempotent and resumable: delta stages are keyed stages like
+    * everything else; an already-committed batch (same content, same
+    * tag) short-circuits to the merged report. Preconditions (checked):
+    * the base's pair stage was built under this config's tau, and every
+    * batch doc_id strictly exceeds every committed doc_id.
     */
   def append(spark: SparkSession, batchJsonlPath: String, outDir: String,
              cfg: CorpusConfig = CorpusConfig(), force: Boolean = false): CorpusResult = {
     TextOps.ensureFunctions(spark)
-    val cfgPath = s"$outDir/config.fingerprint"
-    require(Fs.exists(spark, cfgPath),
-      s"append: no completed base run in $outDir (missing config.fingerprint)")
-    val fingerprint = Fs.readString(spark, cfgPath)
-    require(fingerprint.startsWith("(" + cfg.toString + ","),
+    val base = Area.committed(spark, outDir).getOrElse(throw new IllegalArgumentException(
+      s"append: no completed base run in $outDir"))
+    require(base.pairs.key ==
+      new Stages(spark, outDir).key("pairs", pairParams(cfg), Seq(base.signatures), Nil),
       "append: CorpusConfig differs from the base run's — append would mix " +
         "thresholds; re-run the base with the new config instead")
 
-    val tag = batchTag(batchJsonlPath)
+    val tag = batchTag(batchJsonlPath, spark)
     val applied = appliedBatches(spark, outDir)
     if (!applied.exists(_._1 == tag)) {
       val bdir = batchDir(outDir, tag)
-      new java.io.File(bdir).mkdirs()
-      val priorTags = applied.map(_._1)
+      val stages = new Stages(spark, bdir, force)
+      val prior = base +: applied.map { case (t, _) => Area.committed(spark, batchDir(outDir, t)).get }
+      def merged(f: Area => Stage): DataFrame = prior.map(a => f(a).df).reduce(_ unionByName _)
 
-      val (bdocs, _) = ingestStages(spark, batchJsonlPath, bdir, force)
+      val bdocs = ingest(spark, stages, batchJsonlPath)
 
       // id monotonicity: keep-first exact dedup, lower-id pair order and
       // CC reps are only composition-stable when new ids sort after ALL
       // prior ids (the production dense-ids-at-ingest discipline)
-      val priorDocs = mergedStage(spark, outDir, "docs", priorTags)
-      val maxPrior = priorDocs.agg(max(col("doc_id"))).head().getLong(0)
-      val minBatch = bdocs.agg(min(col("doc_id"))).head() match {
+      val maxPrior = merged(_.docs).agg(max(col("doc_id"))).head().getLong(0)
+      val minBatch = bdocs.df.agg(min(col("doc_id"))).head() match {
         case r if r.isNullAt(0) =>
           throw new IllegalArgumentException(s"append: batch $batchJsonlPath parsed no docs")
         case r => r.getLong(0)
       }
       require(minBatch > maxPrior,
-        s"append: batch doc_ids must exceed all prior ids (batch min $minBatch <= prior max $maxPrior)")
+        s"append: batch $batchJsonlPath doc_ids must exceed all prior ids " +
+          s"(batch min $minBatch <= prior max $maxPrior)")
 
-      val priorDigests = mergedStage(spark, outDir, "digests", priorTags)
-      val bfunnel = Pipeline.stage(spark, s"$bdir/funnel", force)(
-        MlQueries.qualityFunnelFlagsIncremental(bdocs, priorDigests))
-      val bkept = Pipeline.stage(spark, s"$bdir/kept", force)(
-        bdocs.join(bfunnel.where(col("keep") === 1).select(col("doc_id")), "doc_id"))
-      if (force || !Fs.exists(spark, s"$bdir/fails_kept.json"))
-        Sinks.failsReport(bdocs, bkept, "doc_id", s"$bdir/fails_kept.json")
-      val bdigests = Pipeline.stage(spark, s"$bdir/digests", force)(
-        bdocs.select(col("doc_id"), md5(col("text")).as("dg")))
-      locally { val _ = bdigests } // delta state for the NEXT append
+      val bfunnel = stages.parquet("funnel", deps = bdocs +: prior.map(_.digests))(
+        MlQueries.qualityFunnelFlagsIncremental(bdocs.df, merged(_.digests)))
+      val bkept = stages.parquet("kept", deps = Seq(bdocs, bfunnel),
+          sidecar = k => Sinks.failsReport(bdocs.df, k.df, "doc_id", stages.path("fails_kept.json")))(
+        bdocs.df.join(bfunnel.df.where(col("keep") === 1).select(col("doc_id")), "doc_id"))
+      // delta state for the NEXT append
+      stages.parquet("digests", deps = Seq(bdocs))(
+        bdocs.df.select(col("doc_id"), md5(col("text")).as("dg"))): Unit
 
       // batch signatures (the only new text work) + incremental pairs:
       // corpus side reads the PERSISTED signature table — band keys are
       // a map over it, candidates are keyed by the batch's band rows
-      val bhs = Pipeline.stage(spark, s"$bdir/signatures", force)(
-        DedupQueries.hashesOfDocs(spark, bkept))
-      val priorHs = mergedStage(spark, outDir, "signatures", priorTags)
-      Pipeline.stage(spark, s"$bdir/pairs", force)(
+      val bhs = stages.parquet("signatures", deps = Seq(bkept))(
+        DedupQueries.hashesOfDocs(spark, bkept.df))
+      stages.parquet("pairs", pairParams(cfg), bhs +: prior.map(_.signatures))(
         DedupQueries.minhashVerifiedPairsIncremental(
-          priorHs.unionByName(bhs), bhs, cfg.tau)): Unit
+          merged(_.signatures).unionByName(bhs.df), bhs.df, cfg.tau)): Unit
 
       commitBatch(spark, outDir, tag, batchJsonlPath)
     }
-    mergedResult(spark, outDir, cfg, fingerprint)
+    derive(spark, outDir, cfg, force = false, base)
   }
 }

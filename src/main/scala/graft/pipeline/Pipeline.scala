@@ -1,18 +1,19 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Ingest, Sinks, TimeKeys}
+import graft.core.{Fs, Ingest, Sinks, TimeKeys}
 import graft.ml.{Metrics, Models, Poisson}
 import graft.ops.{CompositeFeatureBuilder, HourRingFeatures, SeriesAggs, TemporalSplit, WindowOps}
 
 /** End-to-end bicis pipeline as checkpointed stage composition — the
   * engine's replacement for the Luigi DAG + Redis memoization
   * (SURVEY.md §2.12): each stage materializes to parquet and is skipped
-  * when its output exists (the reference's target-exists idempotency,
-  * bicis/etl/raw_data/split.py:48,56,65), but within a run everything is
-  * one SparkSession and stages compose as DataFrames — the only process
-  * boundary left is the shuffle.
+  * when it was built from the same inputs and params ([[Stages]] — the
+  * reference's target-exists idempotency, bicis/etl/raw_data/split.py:
+  * 48,56,65, keyed by what the stage read), but within a run everything
+  * is one SparkSession and stages compose as DataFrames — the only
+  * process boundary left is the shuffle.
   *
   * Config is plain typed Scala (the ObjectLoader YAML-DI of
   * bicis/lib/object_loader.py:9-97 adds nothing in a compiled language —
@@ -41,51 +42,23 @@ final case class PipelineResult(
 
 object Pipeline {
 
-  /** Checkpoint guard: compute+write unless the output already exists
-    * (Hadoop-FS check — target-exists semantics hold on object stores).
-    */
-  def stage(spark: SparkSession, path: String, force: Boolean = false)
-           (compute: => DataFrame): DataFrame = {
-    val done = graft.core.Fs.exists(spark, s"$path/_SUCCESS")
-    if (force || !done) {
-      val t0 = System.nanoTime()
-      compute.write.mode(SaveMode.Overwrite).parquet(path)
-      // one stderr line per materialized stage: the wall-clock budget of
-      // a checkpointed pipeline is per-stage or it is unactionable
-      System.err.println(f"[graft.Pipeline] stage ${path.split('/').last}%-22s ${(System.nanoTime() - t0) / 1e9}%6.1f s")
-    }
-    spark.read.parquet(path)
-  }
-
   def run(spark: SparkSession, rawCsvPaths: Seq[String], outDir: String,
           cfg: PipelineConfig = PipelineConfig(), force: Boolean = false): PipelineResult = {
-    new java.io.File(outDir).mkdirs()
-    def p(name: String) = s"$outDir/$name"
+    val stages = new Stages(spark, outDir, force)
+    def p(name: String) = stages.path(name)
 
-    // config fingerprint: an outDir is an EXPERIMENT (the reference keys
-    // targets by experiment_name). Re-running with a different config
-    // against the same outDir would silently serve stale targets through
-    // every skip guard — detect it and recompute everything instead.
-    // The new fingerprint is committed only at the END of a successful
-    // run: a crash mid-recompute keeps force0 true on the next attempt
-    // instead of trusting half-recomputed targets.
-    val cfgPath = p("config.fingerprint")
-    val fingerprint = (cfg, rawCsvPaths).toString
-    val force0 = force ||
-      (graft.core.Fs.exists(spark, cfgPath) &&
-        graft.core.Fs.readString(spark, cfgPath) != fingerprint)
+    val unified = stages.parquet("unified", inputs = rawCsvPaths)(
+      Ingest.unify(spark, rawCsvPaths))
 
-    val unified = stage(spark, p("unified"), force0)(Ingest.unify(spark, rawCsvPaths))
-
-    // one bounds scan serves the three split filters AND the sidecar
-    val boundsRow = TemporalSplit.boundsRow(unified, "rent_date", cfg.split)
-    val (tr, va, te) = TemporalSplit.split(unified, "rent_date", cfg.split, Some(boundsRow))
-    val train = stage(spark, p("training"), force0)(tr)
-    val valid = stage(spark, p("validation"), force0)(va)
-    val test = stage(spark, p("testing"), force0)(te)
-    val boundsPath = p("split_bounds.json")
-    if (force0 || !graft.core.Fs.exists(spark, boundsPath))
-      TemporalSplit.writeBoundsJson(spark, boundsRow, boundsPath)
+    // one bounds scan serves the three split filters AND the sidecar;
+    // only a split stage that rebuilds pays it
+    lazy val boundsRow = TemporalSplit.boundsRow(unified.df, "rent_date", cfg.split)
+    lazy val (tr, va, te) =
+      TemporalSplit.split(unified.df, "rent_date", cfg.split, Some(boundsRow))
+    val train = stages.parquet("training", Seq(cfg.split), Seq(unified),
+      sidecar = _ => TemporalSplit.writeBoundsJson(spark, boundsRow, p("split_bounds.json")))(tr)
+    val valid = stages.parquet("validation", Seq(cfg.split), Seq(unified))(va)
+    val test = stages.parquet("testing", Seq(cfg.split), Seq(unified))(te)
 
     // station hour profiles from the training split (A2 + A6/A7) — the
     // training-fitted profiles serve every split, like the reference's
@@ -93,17 +66,17 @@ object Pipeline {
     // reference's store holds per-station hourly avg rents AND returns
     // (hour_feature_builder.py:70-89) and get_features emits both rings
     // (:44-45) — 2×ring features (48 at the default window).
-    def profileStage(name: String, station: String, when: String): DataFrame =
-      stage(spark, p(name), force0) {
-        val series = SeriesAggs.activePeriodAvg(train,
+    def profileStage(name: String, station: String, when: String): Stage =
+      stages.parquet(name, deps = Seq(train)) {
+        val series = SeriesAggs.activePeriodAvg(train.df,
           col(station), TimeKeys.hourGroup(col(when)), TimeKeys.hourKey(col(when)), "v")
         SeriesAggs.stationHourPivot(series, "v")
       }
+    val profiles = Seq(profileStage("profile", "rent_station", "rent_date"),
+      profileStage("profile_returns", "return_station", "return_date"))
     val ring = new CompositeFeatureBuilder(Seq(
-      new HourRingFeatures(spark,
-        profileStage("profile", "rent_station", "rent_date"), "n_rents", cfg.ring),
-      new HourRingFeatures(spark,
-        profileStage("profile_returns", "return_station", "return_date"), "n_returns", cfg.ring)))
+      new HourRingFeatures(spark, profiles(0).df, "n_rents", cfg.ring),
+      new HourRingFeatures(spark, profiles(1).df, "n_returns", cfg.ring)))
     val featureNames = ring.featureNames // single source for dataset + assembler
 
     // per-split dataset (BuildAllDatasets: training/validation/testing):
@@ -113,47 +86,37 @@ object Pipeline {
     // training profile drops out of the inner join, exactly the
     // reference's Redis-miss -> None -> filtered semantics; the fails
     // sidecar (S8) reconciles the counts per split.
-    def buildDataset(name: String, split: DataFrame): DataFrame = {
-      val ds = stage(spark, p(s"dataset_$name"), force0) {
+    def buildDataset(name: String, split: Stage): Stage =
+      stages.parquet(s"dataset_$name", Seq(cfg.windowMicros, cfg.ring), split +: profiles,
+          sidecar = ds => Sinks.failsReport(split.df, ds.df, "id", p(s"fails_$name.json"))) {
         val target = WindowOps.forwardWindowCount(
-          split.select(col("id"), col("rent_station"), col("rent_date")),
+          split.df.select(col("id"), col("rent_station"), col("rent_date")),
           "rent_station", "rent_date", "id", cfg.windowMicros)
-        val trips = split.select(col("id"), col("rent_station").as("user_id"),
+        val trips = split.df.select(col("id"), col("rent_station").as("user_id"),
           col("rent_date").as("ts"))
         ring(trips).join(target.withColumnRenamed("n_rents", "label"), "id")
           .select(Seq(col("id"), col("label").cast("double")) ++
             ring.featureNames.map(col): _*)
       }
-      // sidecar is a target like any stage: don't re-run its anti-join +
-      // counts on a fully-checkpointed re-run
-      val failsPath = p(s"fails_$name.json")
-      if (force0 || !graft.core.Fs.exists(spark, failsPath))
-        Sinks.failsReport(split, ds, "id", failsPath)
-      ds
-    }
-    val splits = Seq("training" -> train, "validation" -> valid, "testing" -> test)
-    val datasets = splits.map { case (name, df) => name -> buildDataset(name, df) }
+    val datasets = Seq("training" -> train, "validation" -> valid, "testing" -> test)
+      .map { case (name, split) => name -> buildDataset(name, split) }
 
     val dataset = datasets.head._2 // training
-    val assembled = Poisson.assemble(dataset, featureNames).cache()
+    val assembled = Poisson.assemble(dataset.df, featureNames).cache()
 
     // M3 model checkpoint stage: the fitted model is a pipeline target
-    // like any parquet stage — loaded, not refit, when it already exists
-    // (the reference persists the model the same way,
-    // poisson_regression.py:28-31 + Luigi target-exists semantics).
+    // like any parquet stage — loaded, not refit, when it was fit on the
+    // same dataset by the same family and GLM config (the reference
+    // persists the model the same way, poisson_regression.py:28-31).
     val family = cfg.modelName match {
       case "poisson" => graft.ml.PoissonFamily(cfg.model) // honor the GLM config
       case other     => Models.registry(other)
     }
-    val modelPath = p("model")
-    // load only when the saved model exists AND was written by the same
-    // family — a config change against an existing outDir must refit,
-    // not feed stale GLM metadata to a different loader
-    val modelLoaded = !force0 && Models.exists(spark, modelPath) &&
-      Models.savedFamily(spark, modelPath).contains(family.name)
-    val model =
-      if (modelLoaded) family.load(modelPath)
-      else { val m = family.fit(assembled); m.save(modelPath); m }
+    lazy val fitted = family.fit(assembled)
+    val modelStage = stages("model", Seq(family), Seq(dataset)) {
+      fitted.save(p("model")); -1L
+    }
+    lazy val model = if (modelStage.built) fitted else family.load(p("model"))
 
     // M4/M5 per split (PredictTask + ModelEvaluationTask over
     // dataset_type): batch predict each split's dataset, evaluate every
@@ -161,33 +124,26 @@ object Pipeline {
     // evaluation JSON per split (evaluate_model.py's
     // evaluation/{dataset_type}.json layout)
     val evaluated = datasets.map { case (name, ds) =>
-      val asm = if (name == "training") assembled
-                else Poisson.assemble(ds, featureNames)
-      // a freshly-fit model invalidates existing prediction targets —
-      // without this a family/config switch would serve the OLD model's
-      // parquet through the stage-skip guard
-      val pred = stage(spark, p(s"predictions_$name"), force0 || !modelLoaded)(
-        model.predict(asm))
-      if (cfg.csvPredictions &&
-          (force0 || !modelLoaded ||
-            !graft.core.Fs.exists(spark, p(s"predictions_csv_$name/_SUCCESS"))))
-        Sinks.csvWithHeader(pred, p(s"predictions_csv_$name"))
-      val m = Metrics.evaluate(pred, cfg.metricNames)
-      graft.core.Fs.writeString(spark, p(s"metrics_$name.json"),
-        Metrics.toJson(m, cfg.metricNames))
+      val pred = stages.parquet(s"predictions_$name", deps = Seq(modelStage, ds))(
+        model.predict(if (name == "training") assembled
+                      else Poisson.assemble(ds.df, featureNames)))
+      if (cfg.csvPredictions)
+        stages(s"predictions_csv_$name", deps = Seq(pred)) {
+          Sinks.csvWithHeader(pred.df, p(s"predictions_csv_$name")); pred.rows
+        }
+      val m = Metrics.evaluate(pred.df, cfg.metricNames)
+      Fs.writeString(spark, p(s"metrics_$name.json"), Metrics.toJson(m, cfg.metricNames))
       (name, pred, m)
     }
     assembled.unpersist() // every consumer is materialized to parquet
     val metrics = evaluated.map { case (n, _, m) => n -> m }.toMap
     // combined metrics.json, splits nested
-    graft.core.Fs.writeString(spark, p("metrics.json"),
+    Fs.writeString(spark, p("metrics.json"),
       evaluated.map { case (n, _, m) =>
         s""""$n": ${Metrics.toJson(m, cfg.metricNames)}"""
       }.mkString("{", ", ", "}"))
-    // the run completed: NOW the outDir is a consistent cfg snapshot
-    graft.core.Fs.writeString(spark, cfgPath, fingerprint)
 
-    PipelineResult(unified.count(), train.count(), valid.count(), test.count(),
-      dataset.count(), evaluated.head._2.count(), metrics, modelLoaded)
+    PipelineResult(unified.rows, train.rows, valid.rows, test.rows,
+      dataset.rows, evaluated.head._2.rows, metrics, modelLoaded = !modelStage.built)
   }
 }

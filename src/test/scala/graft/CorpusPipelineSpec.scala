@@ -917,4 +917,48 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(!new java.io.File(s"$dirA/appends.tsv").exists(),
       "forced run must clear the append registry")
   }
+
+  /** `docs` as JSONL under the FIXED path `<dir>/jsonl` (overwritten in
+    * place on a second call).
+    */
+  private def writeJsonlAt(docs: Seq[(Long, String, String)], dir: String): String = {
+    import spark.implicits._
+    docs.map { case (id, text, src) => (id, text, "en", src, text.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .toJSON.coalesce(1).write.mode("overwrite").text(s"$dir/jsonl")
+    s"$dir/jsonl"
+  }
+
+  private def fillerDocs(ids: Seq[Long], seed: Int): Seq[(Long, String, String)] =
+    ids.map(i => (i, mkText(filler(i.toInt + seed, 60)), s"src${i % 3}"))
+
+  test("a JSONL rewritten in place at the same path is recomputed, not served stale") {
+    val in = mkdir("rewrite_jsonl")
+    val out = mkdir("rewrite_out")
+    val jsonl = writeJsonlAt(fillerDocs(0L until 12L, 500), in)
+    val r1 = CorpusPipeline.run(spark, jsonl, out)
+    assert(r1.nDocs === 12L)
+    assert(writeJsonlAt(fillerDocs(0L until 18L, 500), in) === jsonl)
+    val r2 = CorpusPipeline.run(spark, jsonl, out)
+    assert(r2.nDocs === 18L && r2.nRaw === 18L, s"stale docs stage served: $r2")
+    assert(spark.read.parquet(s"$out/corpus").count() === r2.nSurvivors)
+  }
+
+  test("a batch rewritten in place after its commit is applied as a new batch, never skipped") {
+    val out = mkdir("rebatch_out")
+    CorpusPipeline.run(spark, writeJsonl(fillerDocs(0L until 12L, 500), "rebatch_base"), out)
+    val bdir = mkdir("rebatch_batch")
+    val batch = writeJsonlAt(fillerDocs(200L until 204L, 100), bdir)
+    val r1 = CorpusPipeline.append(spark, batch, out)
+    assert(r1.nDocs === 16L)
+    // same path, new content: a new batch (its ids exceed every prior id)
+    writeJsonlAt(fillerDocs(300L until 303L, 700), bdir)
+    val r2 = CorpusPipeline.append(spark, batch, out)
+    assert(r2.nDocs === 19L, s"rewritten batch skipped as already applied: $r2")
+    assert(CorpusPipeline.appliedBatches(spark, out).map(_._2) === Seq(batch, batch))
+    // same path rewritten with ids already committed: refused, naming it
+    writeJsonlAt(fillerDocs(300L until 303L, 900), bdir)
+    val e = intercept[IllegalArgumentException](CorpusPipeline.append(spark, batch, out))
+    assert(e.getMessage.contains(batch), e.getMessage)
+  }
 }

@@ -9,13 +9,13 @@ import graft.core.Ingest
   */
 class PipelineSpec extends SparkSpec {
 
-  /** ~600 trips over 300 days, 3 stations, v4 dialect (derived returns). */
-  private def genCsv(dir: String): String = {
+  /** ~n trips over 300 days, 3 stations, v4 dialect (derived returns). */
+  private def genCsv(dir: String, n: Int = 600): String = {
     val rnd = new scala.util.Random(5)
     val stations = Seq("RETIRO", "PACIFICO", "ADUANA")
     val sb = new StringBuilder("FECHA_HORA_RETIRO;TIEMPO_USO;NOMBRE_ORIGEN;NOMBRE_DESTINO\n")
     val cal = java.time.LocalDateTime.of(2016, 1, 1, 0, 0)
-    (0 until 600).foreach { i =>
+    (0 until n).foreach { _ =>
       val t = cal.plusHours(rnd.nextInt(300 * 24)).plusMinutes(rnd.nextInt(60))
       val fmt = java.time.format.DateTimeFormatter.ofPattern("dd/MM/yyyy HH:mm")
       sb.append(s"${t.format(fmt)};${5 + rnd.nextInt(55)};${stations(rnd.nextInt(3))};${stations(rnd.nextInt(3))}\n")
@@ -105,5 +105,79 @@ class PipelineSpec extends SparkSpec {
     val ids = Ingest.unifyDenseIds(spark, Seq(csv))
       .select("id").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq === (0L until 600L))
+  }
+
+  /** `_SUCCESS` mtime of each named stage under `out`. */
+  private def stamps(out: String, names: Seq[String]): Map[String, Long] =
+    names.map(n => n -> new java.io.File(s"$out/$n/_SUCCESS").lastModified()).toMap
+
+  private val upstream = Seq("unified", "training", "validation", "testing",
+    "profile", "profile_returns", "dataset_training", "dataset_validation", "dataset_testing")
+  private val predictions = Seq("predictions_training", "predictions_validation",
+    "predictions_testing")
+
+  test("a raw CSV rewritten in place at the same path is recomputed, not served stale") {
+    val dir = java.nio.file.Files.createTempDirectory("pipe_rewrite").toString
+    val csv = genCsv(dir)
+    val out = s"$dir/out"
+    assert(Pipeline.run(spark, Seq(csv), out).unifiedCount === 600L)
+    assert(genCsv(dir, 900) === csv)
+    val r2 = Pipeline.run(spark, Seq(csv), out)
+    assert(r2.unifiedCount === 900L, "stale unified stage served for a rewritten CSV")
+    assert(!r2.modelLoaded, "a model fit on the old trips was loaded")
+    assert(r2.trainCount + r2.valCount + r2.testCount === 900L)
+  }
+
+  test("a model-only config change refits and re-predicts; upstream stages are read") {
+    val dir = java.nio.file.Files.createTempDirectory("pipe_model").toString
+    val csv = genCsv(dir)
+    val out = s"$dir/out"
+    val cfg = PipelineConfig()
+    Pipeline.run(spark, Seq(csv), out, cfg)
+    val up = stamps(out, upstream)
+    val pred = stamps(out, predictions)
+    val metricsMtime = new java.io.File(s"$out/metrics_training.json").lastModified()
+
+    val r2 = Pipeline.run(spark, Seq(csv), out,
+      cfg.copy(model = cfg.model.copy(maxIter = 3)))
+    assert(!r2.modelLoaded, "a new maxIter must refit the model")
+    assert(stamps(out, upstream) === up, "a model-only change rebuilt an upstream stage")
+    stamps(out, predictions).foreach { case (n, t) =>
+      assert(t != pred(n), s"$n not rewritten after the refit")
+    }
+    assert(new java.io.File(s"$out/metrics_training.json").lastModified() != metricsMtime)
+
+    // metrics are evaluated on every run: a new metric set is written
+    // without touching any stage
+    val before = stamps(out, upstream ++ predictions)
+    val r3 = Pipeline.run(spark, Seq(csv), out,
+      cfg.copy(model = cfg.model.copy(maxIter = 3), metricNames = Seq("mae")))
+    assert(r3.metrics("training").keySet === Set("mae"))
+    assert(r3.modelLoaded)
+    assert(stamps(out, upstream ++ predictions) === before)
+    val mjson = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$out/metrics.json"))
+    assert(mjson.contains("mae") && !mjson.contains("rmse"), mjson)
+  }
+
+  test("a stage with _SUCCESS but no manifest is rebuilt with everything downstream") {
+    val dir = java.nio.file.Files.createTempDirectory("pipe_manifest").toString
+    val csv = genCsv(dir)
+    val out = s"$dir/out"
+    val r1 = Pipeline.run(spark, Seq(csv), out)
+    val all = upstream ++ predictions
+    val before = stamps(out, all)
+    // what a run leaves when it dies between the parquet commit and the
+    // manifest write
+    assert(new java.io.File(s"$out/_stages/profile.json").delete())
+    val r2 = Pipeline.run(spark, Seq(csv), out)
+    val after = stamps(out, all)
+    val rebuilt = Seq("profile", "dataset_training", "dataset_validation",
+      "dataset_testing") ++ predictions
+    rebuilt.foreach(n => assert(after(n) != before(n), s"$n was not rebuilt"))
+    (all.toSet -- rebuilt).foreach(n => assert(after(n) === before(n), s"$n was rebuilt"))
+    assert(!r2.modelLoaded, "the model downstream of the rebuilt profile was loaded")
+    assert(new java.io.File(s"$out/_stages/profile.json").exists())
+    assert(r2.unifiedCount === r1.unifiedCount && r2.datasetCount === r1.datasetCount)
+    assert(math.abs(r2.mse - r1.mse) < 1e-9)
   }
 }
