@@ -115,4 +115,23 @@ object Json {
   def field(json: String, name: String): Option[String] =
     ("\"" + java.util.regex.Pattern.quote(name) + "\":\\s*(\"([^\"]*)\"|[^,}\\s]+)").r
       .findFirstMatchIn(json).map(m => Option(m.group(2)).getOrElse(m.group(1)))
+
+  /** A flat object of numbers, in `fields` order. Non-finite values (NaN
+    * over an empty input, Infinity from a degenerate fit) are written as
+    * null: the bare tokens are not valid JSON.
+    */
+  def numbers(fields: Seq[(String, Double)]): String =
+    fields.map { case (n, v) =>
+      s"${quote(n)}: ${if (java.lang.Double.isFinite(v)) v.toString else "null"}"
+    }.mkString("{", ", ", "}")
+
+  /** The flat number object `name` inside a JSON object this engine wrote
+    * with [[numbers]], null read back as NaN; empty when absent.
+    */
+  def numbers(json: String, name: String): Map[String, Double] =
+    ("\"" + java.util.regex.Pattern.quote(name) + "\":\\s*\\{([^}]*)\\}").r
+      .findFirstMatchIn(json).toSeq
+      .flatMap(m => "\"([^\"]*)\":\\s*([^,\\s]+)".r.findAllMatchIn(m.group(1)))
+      .map(f => f.group(1) -> (if (f.group(2) == "null") Double.NaN else f.group(2).toDouble))
+      .toMap
 }

@@ -237,27 +237,32 @@ object Sinks {
 
   /** S8: row-count reconciliation sidecar (build_dataset.py:87-110):
     * input/output counts, error count, and <=100 sample dropped ids.
-    * The anti-join is cached so the error count and sample share one
-    * computation; the input/output counts are separate cheap aggregates
-    * of their (typically parquet-materialized) frames.
+    * The counts are two aggregates of their (typically parquet-
+    * materialized) frames; a caller that already holds them passes them
+    * to the other overload instead.
     */
   def failsReport(input: DataFrame, output: DataFrame, idCol: String,
-                  path: String): Unit = {
+                  path: String): Unit =
+    failsReport(input, output, idCol, path, input.count(), output.count())
+
+  /** The fails report with the input and output row counts given (a
+    * pipeline stage's manifest holds them). One job collects up to 100
+    * dropped ids; a sample short of 100 is every dropped id, so the
+    * anti-join is counted only when the sample is full.
+    */
+  def failsReport(input: DataFrame, output: DataFrame, idCol: String,
+                  path: String, nIn: Long, nOut: Long): Unit = {
     val dropped = input.select(col(idCol)).join(output.select(col(idCol)),
-      Seq(idCol), "left_anti").cache()
-    try {
-      val nErr = dropped.count()
-      // JSON-encode ids: numeric ids print bare, anything else quoted
-      // with escapes (a raw mkString of string ids is not valid JSON)
-      val sample = dropped.limit(100).collect().map(_.get(0)).map {
-        case n: java.lang.Number => n.toString
-        case other => Json.quote(String.valueOf(other))
-      }.mkString("[", ", ", "]")
-      val nIn = input.count()
-      val nOut = output.count() // real output rows (may duplicate/add ids)
-      val jsonStr =
-        s"""{"input_count": $nIn, "output_count": $nOut, "number_of_errors": $nErr, "error_ids": $sample}"""
-      Fs.writeString(input.sparkSession, path, jsonStr)
-    } finally dropped.unpersist()
+      Seq(idCol), "left_anti")
+    val ids = dropped.limit(100).collect().map(_.get(0))
+    val nErr = if (ids.length < 100) ids.length.toLong else dropped.count()
+    // JSON-encode ids: numeric ids print bare, anything else quoted
+    // with escapes (a raw mkString of string ids is not valid JSON)
+    val sample = ids.map {
+      case n: java.lang.Number => n.toString
+      case other => Json.quote(String.valueOf(other))
+    }.mkString("[", ", ", "]")
+    Fs.writeString(input.sparkSession, path,
+      s"""{"input_count": $nIn, "output_count": $nOut, "number_of_errors": $nErr, "error_ids": $sample}""")
   }
 }

@@ -30,14 +30,18 @@ object Metrics {
   val registry: Map[String, DataFrame => Double] =
     exprs.keys.map(n => n -> ((df: DataFrame) => evaluate(df, Seq(n))(n))).toMap
 
+  /** Fails on an empty or unknown metric list. */
+  def validate(names: Seq[String]): Unit =
+    require(names.nonEmpty && names.forall(exprs.contains),
+      s"unknown metric in $names; have ${exprs.keys.toSeq.sorted}")
+
   /** All requested metrics in one aggregate (names sorted for stable
     * output ordering in metrics.json). Zero prediction rows — e.g. a
     * split whose stations all miss the training profile — yield NaN per
     * metric (the aggregate returns null), not an exception.
     */
   def evaluate(predictions: DataFrame, names: Seq[String] = exprs.keys.toSeq.sorted): Map[String, Double] = {
-    require(names.nonEmpty && names.forall(exprs.contains),
-      s"unknown metric in $names; have ${exprs.keys.toSeq.sorted}")
+    validate(names)
     val cols = names.map(n => exprs(n).cast("double").as(n))
     val row = predictions.agg(cols.head, cols.tail: _*).head()
     names.zipWithIndex.map { case (n, i) =>
@@ -50,8 +54,5 @@ object Metrics {
     * serialize as JSON null — the bare tokens are not valid JSON.
     */
   def toJson(m: Map[String, Double], order: Seq[String]): String =
-    order.map { n =>
-      val v = m(n)
-      s""""$n": ${if (java.lang.Double.isFinite(v)) v.toString else "null"}"""
-    }.mkString("{", ", ", "}")
+    graft.core.Json.numbers(order.map(n => n -> m(n)))
 }

@@ -38,6 +38,10 @@ final class CompositeFeatureBuilder(builders: Seq[FeatureBuilder]) extends Featu
   * join), missing hours are zero-filled by the pivot.
   */
 object HourRingFeatures {
+  /** The columns a `window`-wide ring of `measure` appends, newest first. */
+  def featureNames(measure: String, window: Int): Seq[String] =
+    (0 until window).map(i => s"${measure}_${i}_hb")
+
   private def arrayed(pivot: DataFrame, name: String): DataFrame =
     pivot.select(col("user_id"), array((0 to 23).map(h => col(s"h$h")): _*).as(name))
 
@@ -63,7 +67,7 @@ object HourRingFeatures {
 
 final class HourRingFeatures(spark: SparkSession, profile: DataFrame,
                              measure: String, window: Int = 24) extends FeatureBuilder {
-  val featureNames: Seq[String] = (0 until window).map(i => s"${measure}_${i}_hb")
+  val featureNames: Seq[String] = HourRingFeatures.featureNames(measure, window)
 
   /** `profile` is either the wide A6/A7 pivot (user_id, h0..h23) or a
     * pre-arrayed (user_id, __prof_<measure>) projection of

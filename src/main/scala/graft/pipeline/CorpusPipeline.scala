@@ -249,7 +249,8 @@ object CorpusPipeline {
     val canonical = stages.parquet("canonical", Nil, basis :+ clusters)(
       DedupQueries.bestSurvivors(clusters.df, kept))
     val survivors = stages.parquet("survivors", Nil, basis ++ Seq(clusters, canonical),
-        sidecar = sv => Sinks.failsReport(kept, sv.df, "doc_id", p("fails_survivors.json"))) {
+        sidecar = sv => Sinks.failsReport(kept, sv.df, "doc_id", p("fails_survivors.json"),
+          areas.map(_.kept.rows).sum, sv.rows)) {
       // drop non-canonical cluster members; singletons pass through
       val drop = clusters.df.join(
           canonical.df.select(col("best_doc")), col("node") === col("best_doc"), "left_anti")
@@ -901,7 +902,8 @@ object CorpusPipeline {
     val funnel = stages.parquet("funnel", deps = Seq(docs))(
       MlQueries.qualityFunnelFlags(docs.df))
     val kept = stages.parquet("kept", deps = Seq(docs, funnel),
-        sidecar = k => Sinks.failsReport(docs.df, k.df, "doc_id", p("fails_kept.json")))(
+        sidecar = k => Sinks.failsReport(docs.df, k.df, "doc_id", p("fails_kept.json"),
+          docs.rows, k.rows))(
       docs.df.join(funnel.df.where(col("keep") === 1).select(col("doc_id")), "doc_id"))
 
     // ---- persisted dedup state: digest + signature tables ----
@@ -978,7 +980,8 @@ object CorpusPipeline {
       val bfunnel = stages.parquet("funnel", deps = bdocs +: prior.map(_.digests))(
         MlQueries.qualityFunnelFlagsIncremental(bdocs.df, merged(_.digests)))
       val bkept = stages.parquet("kept", deps = Seq(bdocs, bfunnel),
-          sidecar = k => Sinks.failsReport(bdocs.df, k.df, "doc_id", stages.path("fails_kept.json")))(
+          sidecar = k => Sinks.failsReport(bdocs.df, k.df, "doc_id", stages.path("fails_kept.json"),
+            bdocs.rows, k.rows))(
         bdocs.df.join(bfunnel.df.where(col("keep") === 1).select(col("doc_id")), "doc_id"))
       // delta state for the NEXT append
       stages.parquet("digests", deps = Seq(bdocs))(

@@ -44,6 +44,7 @@ object Pipeline {
 
   def run(spark: SparkSession, rawCsvPaths: Seq[String], outDir: String,
           cfg: PipelineConfig = PipelineConfig(), force: Boolean = false): PipelineResult = {
+    Metrics.validate(cfg.metricNames)
     val stages = new Stages(spark, outDir, force)
     def p(name: String) = stages.path(name)
 
@@ -74,10 +75,13 @@ object Pipeline {
       }
     val profiles = Seq(profileStage("profile", "rent_station", "rent_date"),
       profileStage("profile_returns", "return_station", "return_date"))
-    val ring = new CompositeFeatureBuilder(Seq(
+    // a stage is read (a parquet schema job) only when something rebuilds
+    // from it: the ring only when a dataset rebuilds
+    lazy val ring = new CompositeFeatureBuilder(Seq(
       new HourRingFeatures(spark, profiles(0).df, "n_rents", cfg.ring),
       new HourRingFeatures(spark, profiles(1).df, "n_returns", cfg.ring)))
-    val featureNames = ring.featureNames // single source for dataset + assembler
+    // single source for dataset + assembler
+    val featureNames = Seq("n_rents", "n_returns").flatMap(HourRingFeatures.featureNames(_, cfg.ring))
 
     // per-split dataset (BuildAllDatasets: training/validation/testing):
     // A5 forward-window target from the split's own events, W1 ring
@@ -85,24 +89,30 @@ object Pipeline {
     // one broadcast join + one id join. A station missing from the
     // training profile drops out of the inner join, exactly the
     // reference's Redis-miss -> None -> filtered semantics; the fails
-    // sidecar (S8) reconciles the counts per split.
+    // sidecar (S8) reconciles the counts per split, from the two stages'
+    // manifest rows.
     def buildDataset(name: String, split: Stage): Stage =
       stages.parquet(s"dataset_$name", Seq(cfg.windowMicros, cfg.ring), split +: profiles,
-          sidecar = ds => Sinks.failsReport(split.df, ds.df, "id", p(s"fails_$name.json"))) {
+          sidecar = ds => Sinks.failsReport(split.df, ds.df, "id", p(s"fails_$name.json"),
+            split.rows, ds.rows)) {
         val target = WindowOps.forwardWindowCount(
           split.df.select(col("id"), col("rent_station"), col("rent_date")),
           "rent_station", "rent_date", "id", cfg.windowMicros)
         val trips = split.df.select(col("id"), col("rent_station").as("user_id"),
           col("rent_date").as("ts"))
         ring(trips).join(target.withColumnRenamed("n_rents", "label"), "id")
-          .select(Seq(col("id"), col("label").cast("double")) ++
-            ring.featureNames.map(col): _*)
+          .select(Seq(col("id"), col("label").cast("double")) ++ featureNames.map(col): _*)
       }
     val datasets = Seq("training" -> train, "validation" -> valid, "testing" -> test)
       .map { case (name, split) => name -> buildDataset(name, split) }
 
     val dataset = datasets.head._2 // training
-    val assembled = Poisson.assemble(dataset.df, featureNames).cache()
+    var cached: Option[DataFrame] = None
+    lazy val assembled = {
+      val a = Poisson.assemble(dataset.df, featureNames).cache()
+      cached = Some(a)
+      a
+    }
 
     // M3 model checkpoint stage: the fitted model is a pipeline target
     // like any parquet stage — loaded, not refit, when it was fit on the
@@ -119,31 +129,39 @@ object Pipeline {
     lazy val model = if (modelStage.built) fitted else family.load(p("model"))
 
     // M4/M5 per split (PredictTask + ModelEvaluationTask over
-    // dataset_type): batch predict each split's dataset, evaluate every
-    // configured registry metric in one aggregate pass per split, write
+    // dataset_type): batch predict each split's dataset and observe
+    // every registry metric on that same write job — the manifest keeps
+    // them, so no run reads the predictions back to evaluate them. The
     // evaluation JSON per split (evaluate_model.py's
-    // evaluation/{dataset_type}.json layout)
+    // evaluation/{dataset_type}.json layout) is a stage keyed by the
+    // configured metrics and the predictions.
     val evaluated = datasets.map { case (name, ds) =>
-      val pred = stages.parquet(s"predictions_$name", deps = Seq(modelStage, ds))(
+      val pred = stages.parquet(s"predictions_$name", deps = Seq(modelStage, ds),
+          observe = Metrics.exprs)(
         model.predict(if (name == "training") assembled
                       else Poisson.assemble(ds.df, featureNames)))
       if (cfg.csvPredictions)
         stages(s"predictions_csv_$name", deps = Seq(pred)) {
           Sinks.csvWithHeader(pred.df, p(s"predictions_csv_$name")); pred.rows
         }
-      val m = Metrics.evaluate(pred.df, cfg.metricNames)
-      Fs.writeString(spark, p(s"metrics_$name.json"), Metrics.toJson(m, cfg.metricNames))
+      val m = cfg.metricNames.map(n => n -> pred.observed(n)).toMap
+      stages(s"metrics_$name", Seq(cfg.metricNames), Seq(pred)) {
+        Fs.writeString(spark, p(s"metrics_$name.json"), Metrics.toJson(m, cfg.metricNames)); -1L
+      }
       (name, pred, m)
     }
-    assembled.unpersist() // every consumer is materialized to parquet
-    val metrics = evaluated.map { case (n, _, m) => n -> m }.toMap
+    cached.foreach(_.unpersist()) // every consumer is materialized to parquet
     // combined metrics.json, splits nested
-    Fs.writeString(spark, p("metrics.json"),
-      evaluated.map { case (n, _, m) =>
-        s""""$n": ${Metrics.toJson(m, cfg.metricNames)}"""
-      }.mkString("{", ", ", "}"))
+    stages("metrics", Seq(cfg.metricNames), evaluated.map(_._2)) {
+      Fs.writeString(spark, p("metrics.json"),
+        evaluated.map { case (n, _, m) =>
+          s""""$n": ${Metrics.toJson(m, cfg.metricNames)}"""
+        }.mkString("{", ", ", "}"))
+      -1L
+    }
 
-    PipelineResult(unified.rows, train.rows, valid.rows, test.rows,
-      dataset.rows, evaluated.head._2.rows, metrics, modelLoaded = !modelStage.built)
+    PipelineResult(unified.rows, train.rows, valid.rows, test.rows, dataset.rows,
+      evaluated.head._2.rows, evaluated.map { case (n, _, m) => n -> m }.toMap,
+      modelLoaded = !modelStage.built)
   }
 }

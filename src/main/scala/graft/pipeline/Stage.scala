@@ -1,16 +1,18 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import graft.core.{Fs, Json}
 
 /** A committed stage of a [[Stages]] directory: where its output lives,
   * the key it was built under and the row count its manifest records
-  * (-1 for an output that is not one table: a model, a JSON sidecar).
-  * `built` is true when this run wrote it.
+  * (-1 for an output that is not one table: a model, a JSON sidecar)
+  * and the aggregates observed on its write job (NaN where the aggregate
+  * was null or not finite). `built` is true when this run wrote it.
   */
 final class Stage private[pipeline] (spark: SparkSession, val path: String,
-    val key: String, build: String, val rows: Long, val built: Boolean) {
+    val key: String, build: String, val rows: Long, val observed: Map[String, Double],
+    val built: Boolean) {
   /** The stage's parquet output, read once. */
   lazy val df: DataFrame = spark.read.parquet(path)
 
@@ -35,10 +37,11 @@ final class Stage private[pipeline] (spark: SparkSession, val path: String,
   * and mtime of every input file). A changed input or param rebuilds
   * that stage and, through the versions, every stage downstream of it.
   *
-  * MANIFEST = `dir/_stages/<name>.json`: key, build id, rows and build
-  * seconds. A rebuild deletes it first and writes it after the output
-  * commits, as the stage's last write — a run that dies anywhere in
-  * between leaves no manifest, and the next run rebuilds the stage.
+  * MANIFEST = `dir/_stages/<name>.json`: key, build id, rows, build
+  * seconds and observed aggregates. A rebuild deletes it first and
+  * writes it after the output commits, as the stage's last write — a
+  * run that dies anywhere in between leaves no manifest, and the next
+  * run rebuilds the stage.
   * A stage whose manifest holds its key is read, not rebuilt, and its
   * row count comes from the manifest; `force` rebuilds every stage.
   */
@@ -62,7 +65,8 @@ final class Stages(spark: SparkSession, dir: String, force: Boolean = false) {
      catch { case _: java.io.FileNotFoundException => None }).map { m =>
       def f(k: String) = Json.field(m, k).getOrElse(
         throw new IllegalStateException(s"stage manifest ${manifest(name)} lacks $k"))
-      new Stage(spark, path(name), f("key"), f("build"), f("rows").toLong, built = false)
+      new Stage(spark, path(name), f("key"), f("build"), f("rows").toLong,
+        Json.numbers(m, "observed"), built = false)
     }
 
   /** Stage `name`: read when its manifest holds its key, else `build`
@@ -71,31 +75,49 @@ final class Stages(spark: SparkSession, dir: String, force: Boolean = false) {
     */
   def apply(name: String, params: Seq[Any] = Nil, deps: Seq[Stage] = Nil,
             inputs: Seq[String] = Nil, after: Stage => Unit = _ => ())
-           (build: => Long): Stage = {
+           (build: => Long): Stage =
+    stage(name, params, deps, inputs, after)((build, Map.empty))
+
+  private def stage(name: String, params: Seq[Any], deps: Seq[Stage], inputs: Seq[String],
+                    after: Stage => Unit)(build: => (Long, Map[String, Double])): Stage = {
     val k = key(name, params, deps, inputs)
     committed(name).filter(s => !force && s.key == k).getOrElse {
       Fs.delete(spark, manifest(name))
       val t0 = System.nanoTime()
       val b = java.util.UUID.randomUUID.toString
-      val stage = new Stage(spark, path(name), k, b, build, built = true)
+      val (rows, observed) = build
+      val stage = new Stage(spark, path(name), k, b, rows, observed, built = true)
       after(stage)
       val secs = math.round((System.nanoTime() - t0) / 1e6) / 1e3
+      val obs = if (observed.isEmpty) "" else s""", "observed": ${Json.numbers(observed.toSeq.sorted)}"""
       Fs.writeString(spark, manifest(name),
-        s"""{"key": "$k", "build": "$b", "rows": ${stage.rows}, "secs": $secs}""")
+        s"""{"key": "$k", "build": "$b", "rows": $rows, "secs": $secs$obs}""")
       stage
     }
   }
 
-  /** A parquet stage at `path(name)`. Its rows are counted by an
-    * observation on the write job itself, not by a second action.
+  /** A parquet stage at `path(name)`. Its rows, and each `observe`
+    * aggregate (cast to double), are computed by an observation on the
+    * write job itself, not by a second action, and kept in the manifest:
+    * [[Stage.observed]] holds them whether the stage was built or read.
+    * The observed names are part of the key, so a manifest committed
+    * without them is rebuilt, never read with them missing.
     */
   def parquet(name: String, params: Seq[Any] = Nil, deps: Seq[Stage] = Nil,
-              inputs: Seq[String] = Nil, sidecar: Stage => Unit = _ => ())
-             (compute: => DataFrame): Stage =
-    apply(name, params, deps, inputs, sidecar) {
+              inputs: Seq[String] = Nil, sidecar: Stage => Unit = _ => (),
+              observe: Map[String, Column] = Map.empty)
+             (compute: => DataFrame): Stage = {
+    val names = observe.keys.toSeq.sorted
+    stage(name, if (names.isEmpty) params else params :+ names, deps, inputs, sidecar) {
       val obs = Observation()
-      compute.observe(obs, count(lit(1)).as("n"))
+      val aggs = names.map(n => observe(n).cast("double").as(n))
+      compute.observe(obs, count(lit(1)).as("n"), aggs: _*)
         .write.mode(SaveMode.Overwrite).parquet(path(name))
-      obs.get("n").asInstanceOf[Long]
+      val got = obs.get
+      (got("n").asInstanceOf[Long], names.map(n => n -> (got(n) match {
+        case v: java.lang.Double if java.lang.Double.isFinite(v) => v.doubleValue
+        case _ => Double.NaN // null (an average over no rows) or not finite
+      })).toMap)
     }
+  }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import graft.pipeline.{Pipeline, PipelineConfig}
+import graft.pipeline.{Pipeline, PipelineConfig, Stages}
 import graft.core.Ingest
+import graft.ml.Metrics
+import graft.ops.TemporalSplit
 
 /** End-to-end pipeline on generated bicis-shaped raw CSVs: ingest →
   * temporal split → profile → A5 targets → W1 features → GLM → MSE,
@@ -9,21 +11,7 @@ import graft.core.Ingest
   */
 class PipelineSpec extends SparkSpec {
 
-  /** ~n trips over 300 days, 3 stations, v4 dialect (derived returns). */
-  private def genCsv(dir: String, n: Int = 600): String = {
-    val rnd = new scala.util.Random(5)
-    val stations = Seq("RETIRO", "PACIFICO", "ADUANA")
-    val sb = new StringBuilder("FECHA_HORA_RETIRO;TIEMPO_USO;NOMBRE_ORIGEN;NOMBRE_DESTINO\n")
-    val cal = java.time.LocalDateTime.of(2016, 1, 1, 0, 0)
-    (0 until n).foreach { _ =>
-      val t = cal.plusHours(rnd.nextInt(300 * 24)).plusMinutes(rnd.nextInt(60))
-      val fmt = java.time.format.DateTimeFormatter.ofPattern("dd/MM/yyyy HH:mm")
-      sb.append(s"${t.format(fmt)};${5 + rnd.nextInt(55)};${stations(rnd.nextInt(3))};${stations(rnd.nextInt(3))}\n")
-    }
-    val p = s"$dir/recorridos-realizados-2016.csv"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(p), sb.toString)
-    p
-  }
+  import PipelineSpec.genCsv
 
   test("full pipeline runs, splits add up, model predicts, checkpoints skip") {
     val dir = java.nio.file.Files.createTempDirectory("pipe").toString
@@ -179,5 +167,98 @@ class PipelineSpec extends SparkSpec {
     assert(new java.io.File(s"$out/_stages/profile.json").exists())
     assert(r2.unifiedCount === r1.unifiedCount && r2.datasetCount === r1.datasetCount)
     assert(math.abs(r2.mse - r1.mse) < 1e-9)
+  }
+
+  private def read(path: String): String =
+    java.nio.file.Files.readString(java.nio.file.Paths.get(path))
+
+  private val splits = Seq("training", "validation", "testing")
+
+  test("metrics observed on the predictions write equal an evaluation of the predictions") {
+    val dir = java.nio.file.Files.createTempDirectory("pipe_observed").toString
+    val csv = genCsv(dir)
+    val out = s"$dir/out"
+    val names = Metrics.exprs.keys.toSeq.sorted
+    val r = Pipeline.run(spark, Seq(csv), out, PipelineConfig(metricNames = names))
+    val stages = new Stages(spark, out)
+    splits.foreach { n =>
+      val want = Metrics.evaluate(spark.read.parquet(s"$out/predictions_$n"), names)
+      val observed = stages.committed(s"predictions_$n").get.observed
+      names.foreach { m =>
+        Seq(r.metrics(n)(m), observed(m)).foreach { got =>
+          assert(math.abs(got - want(m)) <= 1e-12 * math.abs(want(m)), s"$n $m: $got vs ${want(m)}")
+        }
+      }
+    }
+  }
+
+  test("an empty split's NaN metrics survive the manifest and are written as null") {
+    val dir = java.nio.file.Files.createTempDirectory("pipe_empty").toString
+    val csv = genCsv(dir)
+    val out = s"$dir/out"
+    val cfg = PipelineConfig(split = TemporalSplit.Spec(validationDays = 0))
+    val r1 = Pipeline.run(spark, Seq(csv), out, cfg)
+    assert(r1.valCount === 0L)
+    assert(r1.metrics("validation").values.forall(_.isNaN), r1.metrics)
+    assert(!r1.mse.isNaN)
+    assert(read(s"$out/_stages/predictions_validation.json")
+      .contains(""""observed": {"mae": null, "mse": null, "rmse": null}"""))
+    assert(read(s"$out/metrics_validation.json") === """{"mse": null, "rmse": null, "mae": null}""")
+    val r2 = Pipeline.run(spark, Seq(csv), out, cfg)
+    assert(r2.modelLoaded)
+    assert(r2.metrics("validation").values.forall(_.isNaN), r2.metrics)
+    assert(r2.metrics("validation").keySet === Set("mse", "rmse", "mae"))
+    assert(r2.mse === r1.mse)
+  }
+
+  test("an outDir whose predictions manifests hold no observed metrics is re-predicted") {
+    val dir = java.nio.file.Files.createTempDirectory("pipe_old").toString
+    val csv = genCsv(dir)
+    val out = s"$dir/out"
+    val r1 = Pipeline.run(spark, Seq(csv), out)
+    // the manifests a run that did not observe metrics leaves: the
+    // predictions keyed without the observed names, no metrics stages
+    val stages = new Stages(spark, out)
+    splits.foreach { n =>
+      val m = s"$out/_stages/predictions_$n.json"
+      val deps = Seq("model", s"dataset_$n").map(stages.committed(_).get)
+      val pred = stages.committed(s"predictions_$n").get
+      graft.core.Fs.writeString(spark, m,
+        s"""{"key": "${stages.key(s"predictions_$n", Nil, deps, Nil)}", "build": "old-$n", "rows": ${pred.rows}, "secs": 0.1}""")
+      assert(stages.committed(s"predictions_$n").get.observed.isEmpty)
+      assert(new java.io.File(s"$out/_stages/metrics_$n.json").delete())
+    }
+    assert(new java.io.File(s"$out/_stages/metrics.json").delete())
+    val before = stamps(out, upstream ++ predictions)
+
+    val r2 = Pipeline.run(spark, Seq(csv), out)
+    assert(r2.modelLoaded)
+    assert(stamps(out, upstream) === before.filter(kv => upstream.contains(kv._1)))
+    predictions.foreach(n => assert(stamps(out, Seq(n))(n) != before(n), s"$n was not rebuilt"))
+    splits.foreach { n =>
+      r1.metrics(n).foreach { case (m, v) =>
+        assert(math.abs(r2.metrics(n)(m) - v) <= 1e-12 * math.abs(v), s"$n $m")
+      }
+      assert(stages.committed(s"predictions_$n").get.observed.keySet === Set("mse", "rmse", "mae"))
+    }
+    assert(Pipeline.run(spark, Seq(csv), out).metrics === r2.metrics)
+  }
+}
+
+object PipelineSpec {
+  /** ~n trips over 300 days, 3 stations, v4 dialect (derived returns). */
+  def genCsv(dir: String, n: Int = 600): String = {
+    val rnd = new scala.util.Random(5)
+    val stations = Seq("RETIRO", "PACIFICO", "ADUANA")
+    val sb = new StringBuilder("FECHA_HORA_RETIRO;TIEMPO_USO;NOMBRE_ORIGEN;NOMBRE_DESTINO\n")
+    val cal = java.time.LocalDateTime.of(2016, 1, 1, 0, 0)
+    (0 until n).foreach { _ =>
+      val t = cal.plusHours(rnd.nextInt(300 * 24)).plusMinutes(rnd.nextInt(60))
+      val fmt = java.time.format.DateTimeFormatter.ofPattern("dd/MM/yyyy HH:mm")
+      sb.append(s"${t.format(fmt)};${5 + rnd.nextInt(55)};${stations(rnd.nextInt(3))};${stations(rnd.nextInt(3))}\n")
+    }
+    val p = s"$dir/recorridos-realizados-2016.csv"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(p), sb.toString)
+    p
   }
 }
