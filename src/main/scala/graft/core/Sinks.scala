@@ -1,7 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Sink surface (S5 header-CSV, S8 JSON summaries + fails report).
   *
@@ -236,33 +240,84 @@ object Sinks {
   }
 
   /** S8: row-count reconciliation sidecar (build_dataset.py:87-110):
-    * input/output counts, error count, and <=100 sample dropped ids.
-    * The counts are two aggregates of their (typically parquet-
-    * materialized) frames; a caller that already holds them passes them
-    * to the other overload instead.
+    * input/output counts, error count, and the [[FailsSample]] smallest
+    * dropped ids. The counts are two aggregates of their (typically
+    * parquet-materialized) frames; a caller that already holds them
+    * passes them to the other overload instead.
     */
   def failsReport(input: DataFrame, output: DataFrame, idCol: String,
                   path: String): Unit =
     failsReport(input, output, idCol, path, input.count(), output.count())
 
   /** The fails report with the input and output row counts given (a
-    * pipeline stage's manifest holds them). One job collects up to 100
-    * dropped ids; a sample short of 100 is every dropped id, so the
-    * anti-join is counted only when the sample is full.
+    * pipeline stage's manifest holds them): one aggregate over the
+    * anti-join counts the dropped ids and keeps the sample.
     */
   def failsReport(input: DataFrame, output: DataFrame, idCol: String,
                   path: String, nIn: Long, nOut: Long): Unit = {
-    val dropped = input.select(col(idCol)).join(output.select(col(idCol)),
-      Seq(idCol), "left_anti")
-    val ids = dropped.limit(100).collect().map(_.get(0))
-    val nErr = if (ids.length < 100) ids.length.toLong else dropped.count()
-    // JSON-encode ids: numeric ids print bare, anything else quoted
-    // with escapes (a raw mkString of string ids is not valid JSON)
+    val aggs = dropped(col(idCol), input.schema(idCol).dataType)
+    val r = input.select(col(idCol)).join(output.select(col(idCol)), Seq(idCol), "left_anti")
+      .agg(aggs.head, aggs.tail: _*).head()
+    writeFails(input.sparkSession, path, nIn, nOut, r.getLong(0), r.getSeq[Any](1))
+  }
+
+  /** Dropped ids a fails report lists. */
+  val FailsSample = 100
+
+  /** The fails report's aggregates over the rows where `among` holds:
+    * their count (`n_dropped`) and the [[FailsSample]] smallest of their
+    * `id`s, ascending (`dropped_ids`). The sample is a bounded aggregate
+    * merged across partitions, so unlike a `limit` it does not depend on
+    * how the rows are partitioned. Integral ids sort as numbers, string
+    * ids as strings; `idType` is the id column's type.
+    */
+  def dropped(id: Column, idType: DataType, among: Column = lit(true)): Seq[Column] = {
+    val sample = idType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        udaf(new Smallest(FailsSample, ExpressionEncoder[Array[java.lang.Long]](),
+          Ordering.by[java.lang.Long, Long](_.longValue)), Encoders.LONG)(when(among, id.cast(LongType)))
+      case StringType =>
+        udaf(new Smallest(FailsSample, ExpressionEncoder[Array[String]](), Ordering.String),
+          Encoders.STRING)(when(among, id))
+      case other => throw new IllegalArgumentException(s"fails report: ids of type $other")
+    }
+    Seq(count(when(among, lit(1))).as("n_dropped"), sample.as("dropped_ids"))
+  }
+
+  /** `fails_<x>.json`: the counts, then the sampled ids (numeric ids
+    * bare, anything else a quoted JSON string).
+    */
+  def writeFails(spark: SparkSession, path: String, nIn: Long, nOut: Long, nErr: Long,
+                 ids: Seq[Any]): Unit = {
     val sample = ids.map {
       case n: java.lang.Number => n.toString
       case other => Json.quote(String.valueOf(other))
     }.mkString("[", ", ", "]")
-    Fs.writeString(input.sparkSession, path,
+    Fs.writeString(spark, path,
       s"""{"input_count": $nIn, "output_count": $nOut, "number_of_errors": $nErr, "error_ids": $sample}""")
+  }
+
+  /** The `k` smallest non-null inputs, ascending. A buffer holds at most
+    * `k` sorted values, so an input at or above a full buffer's largest
+    * costs one comparison.
+    */
+  private final class Smallest[T >: Null <: AnyRef : ClassTag](k: Int, enc: Encoder[Array[T]],
+      order: Ordering[T]) extends Aggregator[T, Array[T], Array[T]] {
+    private implicit def ord: Ordering[T] = order
+    def zero: Array[T] = Array.empty[T]
+    def reduce(b: Array[T], a: T): Array[T] =
+      if (a == null || (b.length == k && ord.gteq(a, b(k - 1)))) b
+      else {
+        val i = b.search(a).insertionPoint
+        val r = new Array[T](math.min(b.length + 1, k))
+        System.arraycopy(b, 0, r, 0, i)
+        r(i) = a
+        System.arraycopy(b, i, r, i + 1, r.length - i - 1)
+        r
+      }
+    def merge(a: Array[T], b: Array[T]): Array[T] = (a ++ b).sorted.take(k)
+    def finish(b: Array[T]): Array[T] = b
+    def bufferEncoder: Encoder[Array[T]] = enc
+    def outputEncoder: Encoder[Array[T]] = enc
   }
 }

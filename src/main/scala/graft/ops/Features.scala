@@ -35,7 +35,9 @@ final class CompositeFeatureBuilder(builders: Seq[FeatureBuilder]) extends Featu
 /** W1: `window` cyclic hourly lags of the station's average rents and
   * returns. `profile` must be the A6/A7 wide pivot (user_id, h0..h23) for
   * one measure; stations absent from the profile are dropped (inner
-  * join), missing hours are zero-filled by the pivot.
+  * join), missing hours are zero-filled by the pivot. With `matched`
+  * set, those trips are kept instead (left join, null features) and the
+  * named boolean column says whether the profile held the trip's station.
   */
 object HourRingFeatures {
   /** The columns a `window`-wide ring of `measure` appends, newest first. */
@@ -66,7 +68,8 @@ object HourRingFeatures {
 }
 
 final class HourRingFeatures(spark: SparkSession, profile: DataFrame,
-                             measure: String, window: Int = 24) extends FeatureBuilder {
+                             measure: String, window: Int = 24,
+                             matched: Option[String] = None) extends FeatureBuilder {
   val featureNames: Seq[String] = HourRingFeatures.featureNames(measure, window)
 
   /** `profile` is either the wide A6/A7 pivot (user_id, h0..h23) or a
@@ -79,9 +82,14 @@ final class HourRingFeatures(spark: SparkSession, profile: DataFrame,
       array((0 to 23).map(h => col(s"h$h")): _*).as(s"__prof_$measure"))
 
   def apply(trips: DataFrame): DataFrame = {
-    val withProf = trips
-      .join(broadcast(profArr), "user_id")
-      .withColumn("__h", TimeKeys.hourKey(col("ts")))
+    val joined = matched match {
+      case None => trips.join(broadcast(profArr), "user_id")
+      // the build side marks its rows: a match never rests on the
+      // profile's values, which the pivot zero-fills
+      case Some(m) => trips.join(broadcast(profArr.withColumn(m, lit(true))), Seq("user_id"), "left")
+        .withColumn(m, coalesce(col(m), lit(false)))
+    }
+    val withProf = joined.withColumn("__h", TimeKeys.hourKey(col("ts")))
     val ringCols = (0 until window).map { i =>
       // ring index (h-1-i) mod 24, kept non-negative (hour_feature_builder.py:33-39)
       expr(s"__prof_$measure[(((__h - 1 - $i) % 24) + 24) % 24]").as(s"${measure}_${i}_hb")

@@ -28,20 +28,32 @@ import org.apache.spark.sql.functions._
 object WindowOps {
 
   /** A5: per-key forward [t, t+window) event count with full-window mask.
-    * Emits (idCol, n_rents). `windowMicros − 1` enforces the open right
-    * bound on the microsecond-long range frame.
+    * Emits (idCol, n_rents): [[forwardWindowFlagged]] over the events,
+    * kept where the window is full.
     */
   def forwardWindowCount(events: DataFrame, partKey: String, tsCol: String,
-                         idCol: String, windowMicros: Long): DataFrame = {
+                         idCol: String, windowMicros: Long): DataFrame =
+    forwardWindowFlagged(events, partKey, tsCol, windowMicros)
+      .where(col("full_window"))
+      .select(col(idCol), col("n_rents"))
+
+  /** A5 over every event: `events` plus its forward [t, t+window) count
+    * (`n_rents`) and whether that window is full (`full_window`: t <=
+    * max(partition ts) − window, inclusive). A caller that must account
+    * for the events outside a full window (the forecast's fails report)
+    * keeps them in the same plan. `windowMicros − 1` enforces the open
+    * right bound on the microsecond-long range frame.
+    */
+  def forwardWindowFlagged(events: DataFrame, partKey: String, tsCol: String,
+                           windowMicros: Long): DataFrame = {
     val frame = Window.partitionBy(col(partKey)).orderBy(col("__us"))
       .rangeBetween(0L, windowMicros - 1)
     val whole = Window.partitionBy(col(partKey))
     events
       .withColumn("__us", unix_micros(col(tsCol).cast("timestamp")))
       .withColumn("n_rents", count(lit(1)).over(frame).cast("long"))
-      .withColumn("__max", max(col("__us")).over(whole))
-      .where(col("__us") <= col("__max") - windowMicros)
-      .select(col(idCol), col("n_rents"))
+      .withColumn("full_window", col("__us") <= max(col("__us")).over(whole) - windowMicros)
+      .drop("__us")
   }
 
   /** A5 under key skew: the plain operator's window exchange puts a whole

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Fs, Ingest, Sinks, TimeKeys}
 import graft.ml.{Metrics, Models, Poisson}
@@ -75,34 +75,46 @@ object Pipeline {
       }
     val profiles = Seq(profileStage("profile", "rent_station", "rent_date"),
       profileStage("profile_returns", "return_station", "return_date"))
-    // a stage is read (a parquet schema job) only when something rebuilds
-    // from it: the ring only when a dataset rebuilds
+    // a stage is read only when something rebuilds from it: the ring
+    // only when a dataset rebuilds. Each ring keeps the trips its
+    // profile lacks, flagged, so that one plan can account for them.
     lazy val ring = new CompositeFeatureBuilder(Seq(
-      new HourRingFeatures(spark, profiles(0).df, "n_rents", cfg.ring),
-      new HourRingFeatures(spark, profiles(1).df, "n_returns", cfg.ring)))
+      new HourRingFeatures(spark, profiles(0).df, "n_rents", cfg.ring, Some("__rents_hit")),
+      new HourRingFeatures(spark, profiles(1).df, "n_returns", cfg.ring, Some("__returns_hit"))))
     // single source for dataset + assembler
     val featureNames = Seq("n_rents", "n_returns").flatMap(HourRingFeatures.featureNames(_, cfg.ring))
 
-    // per-split dataset (BuildAllDatasets: training/validation/testing):
-    // A5 forward-window target from the split's own events, W1 ring
-    // features ⋈ target (J2) — the reference's Redis round-trips become
-    // one broadcast join + one id join. A station missing from the
-    // training profile drops out of the inner join, exactly the
-    // reference's Redis-miss -> None -> filtered semantics; the fails
-    // sidecar (S8) reconciles the counts per split, from the two stages'
-    // manifest rows.
-    def buildDataset(name: String, split: Stage): Stage =
+    // per-split dataset (BuildAllDatasets: training/validation/testing),
+    // one plan over the split's rows: the A5 forward-window target over
+    // every row with its full-window flag, then both W1 rings by
+    // broadcast. A row is kept when its window is full and both
+    // training profiles hold its station (the reference's Redis-miss ->
+    // None -> filtered semantics). An observation on the unfiltered rows
+    // counts the dropped ones and samples their ids for the fails
+    // sidecar (S8), whose counts come from the two stages' manifests.
+    def buildDataset(name: String, split: Stage): Stage = {
+      lazy val drops = Observation()
       stages.parquet(s"dataset_$name", Seq(cfg.windowMicros, cfg.ring), split +: profiles,
-          sidecar = ds => Sinks.failsReport(split.df, ds.df, "id", p(s"fails_$name.json"),
-            split.rows, ds.rows)) {
-        val target = WindowOps.forwardWindowCount(
-          split.df.select(col("id"), col("rent_station"), col("rent_date")),
-          "rent_station", "rent_date", "id", cfg.windowMicros)
-        val trips = split.df.select(col("id"), col("rent_station").as("user_id"),
-          col("rent_date").as("ts"))
-        ring(trips).join(target.withColumnRenamed("n_rents", "label"), "id")
+          sidecar = ds => {
+            val got = drops.get
+            val nErr = got("n_dropped").asInstanceOf[Long]
+            if (nErr != split.rows - ds.rows) throw new IllegalStateException(
+              s"dataset_$name: $nErr rows observed dropped, but ${split.rows} in and ${ds.rows} out")
+            Sinks.writeFails(spark, p(s"fails_$name.json"), split.rows, ds.rows, nErr,
+              got("dropped_ids").asInstanceOf[Seq[Any]])
+          }) {
+        val trips = WindowOps.forwardWindowFlagged(
+            split.df.select(col("id"), col("rent_station"), col("rent_date")),
+            "rent_station", "rent_date", cfg.windowMicros)
+          .select(col("id"), col("rent_station").as("user_id"), col("rent_date").as("ts"),
+            col("n_rents").as("label"), col("full_window"))
+        val kept = col("full_window") && col("__rents_hit") && col("__returns_hit")
+        val aggs = Sinks.dropped(col("id"), trips.schema("id").dataType, !kept)
+        ring(trips).observe(drops, aggs.head, aggs.tail: _*)
+          .where(kept)
           .select(Seq(col("id"), col("label").cast("double")) ++ featureNames.map(col): _*)
       }
+    }
     val datasets = Seq("training" -> train, "validation" -> valid, "testing" -> test)
       .map { case (name, split) => name -> buildDataset(name, split) }
 

@@ -2,19 +2,23 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import graft.core.{Fs, Json}
 
 /** A committed stage of a [[Stages]] directory: where its output lives,
   * the key it was built under and the row count its manifest records
   * (-1 for an output that is not one table: a model, a JSON sidecar)
   * and the aggregates observed on its write job (NaN where the aggregate
-  * was null or not finite). `built` is true when this run wrote it.
+  * was null or not finite). `built` is true when this run wrote it;
+  * `schema` is the schema a parquet stage built by this run wrote.
   */
 final class Stage private[pipeline] (spark: SparkSession, val path: String,
     val key: String, build: String, val rows: Long, val observed: Map[String, Double],
-    val built: Boolean) {
-  /** The stage's parquet output, read once. */
-  lazy val df: DataFrame = spark.read.parquet(path)
+    val built: Boolean, val schema: Option[StructType] = None) {
+  /** The stage's parquet output, read once. With the written schema
+    * known the read infers none, so it runs no Spark job.
+    */
+  lazy val df: DataFrame = schema.fold(spark.read)(s => spark.read.schema(s)).parquet(path)
 
   /** What a downstream key holds: the key AND the build that wrote the
     * output, so a rebuild for any reason (a forced run, a lost manifest)
@@ -76,17 +80,18 @@ final class Stages(spark: SparkSession, dir: String, force: Boolean = false) {
   def apply(name: String, params: Seq[Any] = Nil, deps: Seq[Stage] = Nil,
             inputs: Seq[String] = Nil, after: Stage => Unit = _ => ())
            (build: => Long): Stage =
-    stage(name, params, deps, inputs, after)((build, Map.empty))
+    stage(name, params, deps, inputs, after)((build, Map.empty, None))
 
   private def stage(name: String, params: Seq[Any], deps: Seq[Stage], inputs: Seq[String],
-                    after: Stage => Unit)(build: => (Long, Map[String, Double])): Stage = {
+                    after: Stage => Unit)
+                   (build: => (Long, Map[String, Double], Option[StructType])): Stage = {
     val k = key(name, params, deps, inputs)
     committed(name).filter(s => !force && s.key == k).getOrElse {
       Fs.delete(spark, manifest(name))
       val t0 = System.nanoTime()
       val b = java.util.UUID.randomUUID.toString
-      val (rows, observed) = build
-      val stage = new Stage(spark, path(name), k, b, rows, observed, built = true)
+      val (rows, observed, schema) = build
+      val stage = new Stage(spark, path(name), k, b, rows, observed, built = true, schema)
       after(stage)
       val secs = math.round((System.nanoTime() - t0) / 1e6) / 1e3
       val obs = if (observed.isEmpty) "" else s""", "observed": ${Json.numbers(observed.toSeq.sorted)}"""
@@ -101,7 +106,9 @@ final class Stages(spark: SparkSession, dir: String, force: Boolean = false) {
     * write job itself, not by a second action, and kept in the manifest:
     * [[Stage.observed]] holds them whether the stage was built or read.
     * The observed names are part of the key, so a manifest committed
-    * without them is rebuilt, never read with them missing.
+    * without them is rebuilt, never read with them missing. A built
+    * stage carries the schema it wrote, as parquet reads it back (every
+    * field nullable), so reading it back infers nothing.
     */
   def parquet(name: String, params: Seq[Any] = Nil, deps: Seq[Stage] = Nil,
               inputs: Seq[String] = Nil, sidecar: Stage => Unit = _ => (),
@@ -111,13 +118,26 @@ final class Stages(spark: SparkSession, dir: String, force: Boolean = false) {
     stage(name, if (names.isEmpty) params else params :+ names, deps, inputs, sidecar) {
       val obs = Observation()
       val aggs = names.map(n => observe(n).cast("double").as(n))
-      compute.observe(obs, count(lit(1)).as("n"), aggs: _*)
+      val df = compute
+      df.observe(obs, count(lit(1)).as("n"), aggs: _*)
         .write.mode(SaveMode.Overwrite).parquet(path(name))
       val got = obs.get
       (got("n").asInstanceOf[Long], names.map(n => n -> (got(n) match {
         case v: java.lang.Double if java.lang.Double.isFinite(v) => v.doubleValue
         case _ => Double.NaN // null (an average over no rows) or not finite
-      })).toMap)
+      })).toMap, Some(Stages.nullable(df.schema).asInstanceOf[StructType]))
     }
+  }
+}
+
+object Stages {
+  /** `t` with every field, array element and map value nullable: the
+    * schema a parquet file written from `t` reads back as.
+    */
+  private[pipeline] def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 }

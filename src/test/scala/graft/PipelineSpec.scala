@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import graft.pipeline.{Pipeline, PipelineConfig, Stages}
 import graft.core.Ingest
 import graft.ml.Metrics
-import graft.ops.TemporalSplit
+import graft.ops.{CompositeFeatureBuilder, HourRingFeatures, TemporalSplit, WindowOps}
 
 /** End-to-end pipeline on generated bicis-shaped raw CSVs: ingest →
   * temporal split → profile → A5 targets → W1 features → GLM → MSE,
@@ -211,6 +212,43 @@ class PipelineSpec extends SparkSpec {
     assert(r2.mse === r1.mse)
   }
 
+  test("each dataset is the ring joins ⋈ the forward-window target; its fails report their anti-join") {
+    val dir = java.nio.file.Files.createTempDirectory("pipe_fused").toString
+    val csv = PipelineSpec.genCsvNewStations(dir)
+    val out = s"$dir/out"
+    val cfg = PipelineConfig()
+    Pipeline.run(spark, Seq(csv), out, cfg)
+    def stage(n: String) = spark.read.parquet(s"$out/$n")
+    def stations(n: String) = stage(n).select("user_id").collect().map(_.getString(0)).toSet
+    // the fixture: NUEVO is in neither training profile, SOLO only in the returns one
+    assert(!stations("profile").contains("NUEVO") && !stations("profile_returns").contains("NUEVO"))
+    assert(!stations("profile").contains("SOLO") && stations("profile_returns").contains("SOLO"))
+    // the composition the dataset stage replaced: inner ring joins ⋈ the
+    // full-window target on id
+    val ring = new CompositeFeatureBuilder(Seq(
+      new HourRingFeatures(spark, stage("profile"), "n_rents", cfg.ring),
+      new HourRingFeatures(spark, stage("profile_returns"), "n_returns", cfg.ring)))
+    val dropped = splits.map { n =>
+      val split = stage(n)
+      val target = WindowOps.forwardWindowCount(
+        split.select(col("id"), col("rent_station"), col("rent_date")),
+        "rent_station", "rent_date", "id", cfg.windowMicros)
+      val want = ring(split.select(col("id"), col("rent_station").as("user_id"), col("rent_date").as("ts")))
+        .join(target.withColumnRenamed("n_rents", "label"), "id")
+        .select(Seq(col("id"), col("label").cast("double")) ++ ring.featureNames.map(col): _*)
+      val got = stage(s"dataset_$n")
+      assert(got.columns.toSeq === want.columns.toSeq, n)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"dataset_$n differs")
+      val ids = split.select("id").join(want.select("id"), Seq("id"), "left_anti")
+        .collect().map(_.getLong(0)).sorted
+      assert(read(s"$out/fails_$n.json") === s"""{"input_count": ${split.count()}, """ +
+        s""""output_count": ${want.count()}, "number_of_errors": ${ids.length}, """ +
+        s""""error_ids": ${ids.take(100).mkString("[", ", ", "]")}}""", n)
+      ids.length
+    }
+    assert(dropped.exists(_ > 100), s"no split drops more than 100 ids: $dropped")
+  }
+
   test("an outDir whose predictions manifests hold no observed metrics is re-predicted") {
     val dir = java.nio.file.Files.createTempDirectory("pipe_old").toString
     val csv = genCsv(dir)
@@ -246,6 +284,30 @@ class PipelineSpec extends SparkSpec {
 }
 
 object PipelineSpec {
+  /** 900 trips over 300 days between three stations, plus two stations
+    * the training split's profiles miss: SOLO, a return station in
+    * training that rents only in validation, and NUEVO, which appears
+    * only in testing, with 200 rents.
+    */
+  def genCsvNewStations(dir: String): String = {
+    val rnd = new scala.util.Random(11)
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("dd/MM/yyyy HH:mm")
+    val t0 = java.time.LocalDateTime.of(2016, 1, 1, 0, 0)
+    val old = Seq("RETIRO", "PACIFICO", "ADUANA")
+    def trip(day: Int, from: String, to: String) =
+      s"${t0.plusDays(day).plusMinutes(rnd.nextInt(24 * 60)).format(fmt)};${5 + rnd.nextInt(55)};$from;$to"
+    def any = old(rnd.nextInt(3))
+    val lines = (0 until 900).map(_ => trip(rnd.nextInt(300), any, any)) ++
+      (0 until 40).map(_ => trip(rnd.nextInt(100), any, "SOLO")) ++
+      (0 until 30).map(_ => trip(150 + rnd.nextInt(50), "SOLO", any)) ++
+      (0 until 200).map(_ => trip(215 + rnd.nextInt(80), "NUEVO", any))
+    val p = s"$dir/recorridos-realizados-2016.csv"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
+      ("FECHA_HORA_RETIRO;TIEMPO_USO;NOMBRE_ORIGEN;NOMBRE_DESTINO" +: lines).mkString("", "\n", "\n"))
+    p
+  }
+
+
   /** ~n trips over 300 days, 3 stations, v4 dialect (derived returns). */
   def genCsv(dir: String, n: Int = 600): String = {
     val rnd = new scala.util.Random(5)

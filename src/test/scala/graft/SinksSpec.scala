@@ -60,6 +60,29 @@ class SinksSpec extends SparkSpec {
     assert(txt.contains("3") && txt.contains("6") && txt.contains("9"))
   }
 
+  test("fails report: the count and the 100 smallest dropped ids, whatever the partitioning") {
+    import spark.implicits._
+    // 250 of 1000 ids dropped, the input in shuffled order
+    val ids = new scala.util.Random(3).shuffle((1L to 1000L).toList)
+    val want = s"""{"input_count": 1000, "output_count": 750, "number_of_errors": 250, """ +
+      s""""error_ids": ${(4L to 400L by 4L).mkString("[", ", ", "]")}}"""
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    try Seq(1, 7).foreach { n =>
+      spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+      val input = ids.toDF("id").repartition(n)
+      val output = input.where(col("id") % 4 =!= 0)
+      val p = tmp() + "/fails.json"
+      Sinks.failsReport(input, output, "id", p)
+      assert(java.nio.file.Files.readString(java.nio.file.Paths.get(p)) === want, s"$n partitions")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    // string ids sort as strings and are written as JSON strings
+    val p = tmp() + "/fails_str.json"
+    val docs = Seq("b\"x", "a", "c", "d").toDF("doc_id")
+    Sinks.failsReport(docs, docs.where(col("doc_id") === "a"), "doc_id", p, 4L, 1L)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(p)) ===
+      """{"input_count": 4, "output_count": 1, "number_of_errors": 3, "error_ids": ["b\"x", "c", "d"]}""")
+  }
+
   test("sharded parquet: hive layout, small-files collapse, maxRecordsPerFile cap, roundtrip") {
     import spark.implicits._
     // 4 partitions of skewed sizes across 8 input tasks — without the
