@@ -75,10 +75,8 @@ object Bench {
       // pivot aggregate, broadcast ring join, posexplode, sort) at ~zero
       // data cost, so the measured run hits warm generated classes
       val evLim = graft.core.Tables.events(spark, sfDir).limit(20000)
-      val series = graft.ops.SeriesAggs.activePeriodAvg(
-        evLim.where(col("event_type") === "click"), col("user_id"),
-        graft.core.TimeKeys.hourGroup(col("ts")), graft.core.TimeKeys.hourKey(col("ts")), "v")
-      val prof = graft.ops.SeriesAggs.stationHourPivot(series, "v")
+      val prof = graft.ops.SeriesAggs.stationHourProfile(
+        evLim.where(col("event_type") === "click"), col("user_id"), col("ts"))
       new graft.ops.HourRingFeatures(spark, prof, "n_rents")
         .applyLong(evLim.select(col("event_id"), col("user_id"), col("ts")), "event_id")
         .select(col("event_id"), col("i").cast("long").as("i"), col("n_rents"))
@@ -138,7 +136,7 @@ object Bench {
           }
           true
         }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
         finally spark.sparkContext.setJobDescription(null)

@@ -2,61 +2,47 @@ package graft.ml
 
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.{GeneralizedLinearRegression, GeneralizedLinearRegressionModel}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.{Tables, TimeKeys}
-import graft.ops.{CompositeFeatureBuilder, HourRingFeatures, SeriesAggs, WindowOps}
+import graft.ops.{CompositeFeatureBuilder, HourRingFeatures, WindowOps}
 
 /** M2-M5: the reference's model stage (bicis/etl/models/poisson_regression
   * .py:12-47, evaluate_model.py:13-41) on Spark MLlib's identical GLM.
   *
-  * Dataset assembly replaces the reference's Redis-backed per-row feature
-  * fetch + RDD pair join (build_dataset.py:63-141) with two Catalyst
-  * joins: trips ⋈ broadcast(station hour profile) for the W1 ring
-  * features, and features ⋈ targets on the event id (J2). The fails
-  * report (S8) falls out of the same plan as counts.
+  * [[dataset]] is the one BuildDataset (build_dataset.py:32-141) of the
+  * engine: the forecast pipeline and the gated `ml_dataset` both call it.
+  * It replaces the reference's Redis-backed per-row feature fetch + RDD
+  * pair join (build_dataset.py:63-141) with one plan: the A5 target
+  * window over the rows, then both W1 rings by broadcast join.
   */
 object Poisson {
 
   final case class Config(
-      window: Int = 24,
       family: String = "poisson",
       link: String = "identity",   // reference default, poisson_regression.py:14
       maxIter: Int = 1)            // reference default, poisson_regression.py:13
 
-  /** ML dataset: event id, label = next-1h rents at the station, features
-    * = `window` cyclic hourly lags of the station's avg rents AND avg
-    * returns (W1 — the reference emits BOTH measures per ring position,
-    * hour_feature_builder.py:44-45 over its two-measure Redis store
-    * :70-89, so the baseline model trains on 2×window features).
+  /** ML dataset over `rows` (id, user_id = station, ts = rent time): every
+    * row with its label = rents at its station in the next `windowMicros`
+    * (A5, counted over all `rows`), `ring` cyclic hourly lags of the
+    * station's avg rents AND avg returns from the two training profiles
+    * (W1 — the reference emits BOTH measures per ring position,
+    * hour_feature_builder.py:44-45, so the model trains on 2×ring
+    * features), and `kept`: the window is full and both profiles hold the
+    * station (the reference's Redis miss -> None -> filtered). The
+    * dropped rows stay in the frame, so that one plan can account for
+    * them (the fails report, S8).
     */
-  def buildDataset(spark: SparkSession, dir: String, cfg: Config = Config()): DataFrame = {
-    val events = Tables.events(spark, dir)
-    def profileOf(eventType: String): DataFrame = {
-      val series = SeriesAggs.activePeriodAvg(
-        events.where(col("event_type") === eventType),
-        col("user_id"), TimeKeys.hourGroup(col("ts")), TimeKeys.hourKey(col("ts")), "v")
-      SeriesAggs.stationHourPivot(series, "v")
-    }
-    val rents = events.where(col("event_type") === "click")
-    // ONE joined two-measure profile (stations active in either measure,
-    // missing measure zero-filled) feeding both rings — the reference
-    // joins measures once at the basic-features stage and zero-fills
-    // after the pivot (hour_feature_builder.py:70-89); two independent
-    // inner joins would drop trips at rents-only stations.
-    val prof = HourRingFeatures.joinedProfile(profileOf("click"), profileOf("purchase"))
-    val ring = new CompositeFeatureBuilder(Seq(
-      new HourRingFeatures(spark, prof.select(col("user_id"), col("__prof_n_rents")), "n_rents", cfg.window),
-      new HourRingFeatures(spark, prof.select(col("user_id"), col("__prof_n_returns")), "n_returns", cfg.window)))
-    val feats = ring(events.select(col("event_id"), col("user_id"), col("ts")))
-    // label counts RENTS (clicks) like the features' hour profile — the
-    // reference's trip table is all-rents, so feature and target frames
-    // must share the event-type role mapping here too
-    val target = WindowOps.forwardWindowCount(rents, "user_id", "ts", "event_id", 3600L * 1000000L)
-      .withColumnRenamed("n_rents", "label")
-    feats.join(target, "event_id")                       // J2
-      .select(Seq(col("event_id"), col("label").cast("double")) ++
-        ring.featureNames.map(col): _*)
+  def dataset(rows: DataFrame, rentsProfile: DataFrame, returnsProfile: DataFrame,
+              windowMicros: Long, ring: Int): DataFrame = {
+    val spark = rows.sparkSession
+    val rings = new CompositeFeatureBuilder(Seq(
+      new HourRingFeatures(spark, rentsProfile, "n_rents", ring, Some("__rents_hit")),
+      new HourRingFeatures(spark, returnsProfile, "n_returns", ring, Some("__returns_hit"))))
+    val labeled = WindowOps.forwardWindowFlagged(rows, "user_id", "ts", windowMicros)
+    rings(labeled).select(Seq(col("id"), col("n_rents").cast("double").as("label")) ++
+      rings.featureNames.map(col) :+
+      (col("full_window") && col("__rents_hit") && col("__returns_hit")).as("kept"): _*)
   }
 
   def assemble(ds: DataFrame, featureNames: Seq[String]): DataFrame =
@@ -75,14 +61,7 @@ object Poisson {
   /** A9/M5: mean squared error via the metric registry (one aggregate). */
   def mse(predictions: DataFrame): Double = Metrics.registry("mse")(predictions)
 
-  /** End-to-end pipeline (fit on the data, predict, attach label). */
-  def run(spark: SparkSession, dir: String, cfg: Config = Config()): DataFrame =
-    runOn(buildDataset(spark, dir, cfg), cfg)
-
-  /** [[run]] on a caller-supplied dataset frame (the bench shares ONE
-    * memoized [[buildDataset]] between the dataset gate and this fit —
-    * r16-opt; identical semantics, the derivation just isn't repeated).
-    */
+  /** Fit on `ds` ([[dataset]]'s kept rows), predict, attach label. */
   def runOn(ds: DataFrame, cfg: Config = Config()): DataFrame = {
     // single source for the ring naming (Features.scala), not a copy
     val featureNames = ds.columns.filter(_.endsWith("_hb")).toSeq

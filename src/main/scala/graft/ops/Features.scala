@@ -37,34 +37,13 @@ final class CompositeFeatureBuilder(builders: Seq[FeatureBuilder]) extends Featu
   * one measure; stations absent from the profile are dropped (inner
   * join), missing hours are zero-filled by the pivot. With `matched`
   * set, those trips are kept instead (left join, null features) and the
-  * named boolean column says whether the profile held the trip's station.
+  * named boolean column says whether the profile held the trip's station;
+  * the ML dataset ([[graft.ml.Poisson.dataset]]) runs both rings this way.
   */
 object HourRingFeatures {
   /** The columns a `window`-wide ring of `measure` appends, newest first. */
   def featureNames(measure: String, window: Int): Seq[String] =
     (0 until window).map(i => s"${measure}_${i}_hb")
-
-  private def arrayed(pivot: DataFrame, name: String): DataFrame =
-    pivot.select(col("user_id"), array((0 to 23).map(h => col(s"h$h")): _*).as(name))
-
-  /** Reference semantics for the TWO-measure ring (hour_feature_builder
-    * .py:44-45 over the joined rents+returns store :70-89): ONE profile
-    * holding both measures' hour arrays — stations active in EITHER
-    * measure are kept (full-outer join), a missing measure is a
-    * zero-filled 24-array (the reference zero-fills missing
-    * (station,hour) cells after its pivot). Feeding both rings from this
-    * keeps trips at stations with rents but no returns, where two
-    * independent inner joins would drop them.
-    */
-  def joinedProfile(rentsPivot: DataFrame, returnsPivot: DataFrame,
-                    m1: String = "n_rents", m2: String = "n_returns"): DataFrame = {
-    def zeros = array(Seq.fill(24)(lit(0.0)): _*)
-    arrayed(rentsPivot, s"__prof_$m1")
-      .join(arrayed(returnsPivot, s"__prof_$m2"), Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        coalesce(col(s"__prof_$m1"), zeros).as(s"__prof_$m1"),
-        coalesce(col(s"__prof_$m2"), zeros).as(s"__prof_$m2"))
-  }
 }
 
 final class HourRingFeatures(spark: SparkSession, profile: DataFrame,
@@ -72,14 +51,8 @@ final class HourRingFeatures(spark: SparkSession, profile: DataFrame,
                              matched: Option[String] = None) extends FeatureBuilder {
   val featureNames: Seq[String] = HourRingFeatures.featureNames(measure, window)
 
-  /** `profile` is either the wide A6/A7 pivot (user_id, h0..h23) or a
-    * pre-arrayed (user_id, __prof_<measure>) projection of
-    * [[HourRingFeatures.joinedProfile]] — auto-detected by column name. */
-  private def profArr: DataFrame =
-    if (profile.columns.contains(s"__prof_$measure"))
-      profile.select(col("user_id"), col(s"__prof_$measure"))
-    else profile.select(col("user_id"),
-      array((0 to 23).map(h => col(s"h$h")): _*).as(s"__prof_$measure"))
+  private def profArr: DataFrame = profile.select(col("user_id"),
+    array((0 to 23).map(h => col(s"h$h")): _*).as(s"__prof_$measure"))
 
   def apply(trips: DataFrame): DataFrame = {
     val joined = matched match {

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.TimeKeys
 
 /** Series aggregations — the reference's "basic features" family
   * (bicis/etl/feature_extraction/basic_features.py:41-66).
@@ -50,4 +51,10 @@ object SeriesAggs {
     }
     renamed.na.fill(0.0, (0 to 23).map(h => s"h$h"))
   }
+
+  /** A2 + A6/A7: the station hour profile of `df`'s events (the W1
+    * rings' input), wide (user_id, h0..h23).
+    */
+  def stationHourProfile(df: DataFrame, station: Column, ts: Column): DataFrame =
+    stationHourPivot(activePeriodAvg(df, station, TimeKeys.hourGroup(ts), TimeKeys.hourKey(ts), "v"), "v")
 }

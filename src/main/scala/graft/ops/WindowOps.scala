@@ -102,61 +102,6 @@ object WindowOps {
       .select(col("__id").as(idCol), col("n_rents"))
   }
 
-  /** Typed escape hatch for A5 (SURVEY.md §7.4): same semantics via
-    * groupByKey + flatMapGroups — the fallback if a RANGE-frame boundary
-    * mismatch ever surfaced, and the template for per-group imperative
-    * logic Spark expressions can't write. NOTE the scale tradeoff this
-    * makes explicit: the whole group materializes in one task (the
-    * reference's groupByKey hazard), vs the window version's streaming
-    * frame evaluation. Kept for API completeness and as a differential
-    * test oracle (WindowOpsSpec asserts equality).
-    */
-  def forwardWindowCountTyped(spark: org.apache.spark.sql.SparkSession,
-                              events: DataFrame, partKey: String, tsCol: String,
-                              idCol: String, windowMicros: Long): DataFrame = {
-    import spark.implicits._
-    events
-      // the partition key groups by its STRING form — injective for
-      // numerics and identity for strings, so the fallback really does
-      // accept every key type the primary operator accepts (a long cast
-      // would throw under ANSI on station-name keys, or null-merge them)
-      .select(col(partKey).cast("string"), col(idCol).cast("long"),
-        unix_micros(col(tsCol).cast("timestamp")))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (_: String, it: Iterator[(String, Long, Long)]) =>
-        forwardCountsCore(it.map(e => (e._2, e._3)).toArray, windowMicros).iterator
-      }
-      .toDF(idCol, "n_rents")
-  }
-
-  /** Pure single-group A5 core (two-pointer over the ts-sorted events):
-    * (id, count of events with ts in [t, t+w)) for every event with
-    * t <= max(ts) - w. Factored out so WindowLawsProps can law-check it
-    * against the O(n²) definition without a Spark session.
-    */
-  private[graft] def forwardCountsCore(events: Array[(Long, Long)],
-                                       windowMicros: Long): Seq[(Long, Long)] = {
-    val es = events.sortBy(_._2)
-    if (es.isEmpty) Seq.empty
-    else {
-      val cutoff = es.last._2 - windowMicros
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      var lo = 0 // first idx with ts >= t (ties before the current row count!)
-      var hi = 0 // first idx with ts >= t + w
-      var idx = 0
-      while (idx < es.length && es(idx)._2 <= cutoff) {
-        val (id, t) = es(idx)
-        while (es(lo)._2 < t) lo += 1
-        if (hi < lo) hi = lo
-        while (hi < es.length && es(hi)._2 < t + windowMicros) hi += 1
-        out += ((id, (hi - lo).toLong))
-        idx += 1
-      }
-      out.toSeq
-    }
-  }
-
   /** A10: tumbling event-time window count (the notebook's `resample('H')`).
     * Implemented as groupBy over the window start — a plain hash aggregate,
     * partial-combined map-side.

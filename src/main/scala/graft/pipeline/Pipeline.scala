@@ -2,9 +2,9 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Fs, Ingest, Sinks, TimeKeys}
+import graft.core.{Fs, Ingest, Sinks}
 import graft.ml.{Metrics, Models, Poisson}
-import graft.ops.{CompositeFeatureBuilder, HourRingFeatures, SeriesAggs, TemporalSplit, WindowOps}
+import graft.ops.{HourRingFeatures, SeriesAggs, TemporalSplit}
 
 /** End-to-end bicis pipeline as checkpointed stage composition — the
   * engine's replacement for the Luigi DAG + Redis memoization
@@ -68,30 +68,19 @@ object Pipeline {
     // (hour_feature_builder.py:70-89) and get_features emits both rings
     // (:44-45) — 2×ring features (48 at the default window).
     def profileStage(name: String, station: String, when: String): Stage =
-      stages.parquet(name, deps = Seq(train)) {
-        val series = SeriesAggs.activePeriodAvg(train.df,
-          col(station), TimeKeys.hourGroup(col(when)), TimeKeys.hourKey(col(when)), "v")
-        SeriesAggs.stationHourPivot(series, "v")
-      }
+      stages.parquet(name, deps = Seq(train))(
+        SeriesAggs.stationHourProfile(train.df, col(station), col(when)))
     val profiles = Seq(profileStage("profile", "rent_station", "rent_date"),
       profileStage("profile_returns", "return_station", "return_date"))
-    // a stage is read only when something rebuilds from it: the ring
-    // only when a dataset rebuilds. Each ring keeps the trips its
-    // profile lacks, flagged, so that one plan can account for them.
-    lazy val ring = new CompositeFeatureBuilder(Seq(
-      new HourRingFeatures(spark, profiles(0).df, "n_rents", cfg.ring, Some("__rents_hit")),
-      new HourRingFeatures(spark, profiles(1).df, "n_returns", cfg.ring, Some("__returns_hit"))))
     // single source for dataset + assembler
     val featureNames = Seq("n_rents", "n_returns").flatMap(HourRingFeatures.featureNames(_, cfg.ring))
 
     // per-split dataset (BuildAllDatasets: training/validation/testing),
-    // one plan over the split's rows: the A5 forward-window target over
-    // every row with its full-window flag, then both W1 rings by
-    // broadcast. A row is kept when its window is full and both
-    // training profiles hold its station (the reference's Redis-miss ->
-    // None -> filtered semantics). An observation on the unfiltered rows
-    // counts the dropped ones and samples their ids for the fails
-    // sidecar (S8), whose counts come from the two stages' manifests.
+    // [[Poisson.dataset]] over the split's rows; a stage is read only when
+    // something rebuilds from it, the profiles only when a dataset
+    // rebuilds. An observation on the unfiltered rows counts the dropped
+    // ones and samples their ids for the fails sidecar (S8), whose counts
+    // come from the two stages' manifests.
     def buildDataset(name: String, split: Stage): Stage = {
       lazy val drops = Observation()
       stages.parquet(s"dataset_$name", Seq(cfg.windowMicros, cfg.ring), split +: profiles,
@@ -103,16 +92,11 @@ object Pipeline {
             Sinks.writeFails(spark, p(s"fails_$name.json"), split.rows, ds.rows, nErr,
               got("dropped_ids").asInstanceOf[Seq[Any]])
           }) {
-        val trips = WindowOps.forwardWindowFlagged(
-            split.df.select(col("id"), col("rent_station"), col("rent_date")),
-            "rent_station", "rent_date", cfg.windowMicros)
-          .select(col("id"), col("rent_station").as("user_id"), col("rent_date").as("ts"),
-            col("n_rents").as("label"), col("full_window"))
-        val kept = col("full_window") && col("__rents_hit") && col("__returns_hit")
-        val aggs = Sinks.dropped(col("id"), trips.schema("id").dataType, !kept)
-        ring(trips).observe(drops, aggs.head, aggs.tail: _*)
-          .where(kept)
-          .select(Seq(col("id"), col("label").cast("double")) ++ featureNames.map(col): _*)
+        val all = Poisson.dataset(
+          split.df.select(col("id"), col("rent_station").as("user_id"), col("rent_date").as("ts")),
+          profiles(0).df, profiles(1).df, cfg.windowMicros, cfg.ring)
+        val aggs = Sinks.dropped(col("id"), all.schema("id").dataType, !col("kept"))
+        all.observe(drops, aggs.head, aggs.tail: _*).where(col("kept")).drop("kept")
       }
     }
     val datasets = Seq("training" -> train, "validation" -> valid, "testing" -> test)

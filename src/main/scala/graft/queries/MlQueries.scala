@@ -13,16 +13,28 @@ import graft.ops.{HourRingFeatures, SeriesAggs, TextOps}
   */
 object MlQueries {
 
-  /** Session artifact of [[Poisson.buildDataset]] — the J2 dataset
-    * frame is consumed by TWO registered queries (ml_dataset hash-gates
-    * the frame; ml_poisson_predict trains/predicts on it), and before
-    * r16-opt each derived the full two-profile ring + forward-window
-    * pipeline independently (~2 s apiece at sf0.1). Production analog:
-    * the persisted training-dataset table a pipeline writes once per
-    * snapshot.
+  /** The ML dataset over the events table: [[Poisson.dataset]]'s kept
+    * rows over the click events (event_id -> id), with the rents profile
+    * from the clicks and the returns profile from the purchases.
+    */
+  private[graft] def eventsDataset(s: SparkSession, dir: String): DataFrame = {
+    val events = Tables.events(s, dir)
+    def typed(t: String) = events.where(col("event_type") === t)
+    def profile(t: String) = SeriesAggs.stationHourProfile(typed(t), col("user_id"), col("ts"))
+    // the forecast's default 1 h window and 24-position ring, as in the oracle
+    Poisson.dataset(typed("click").select(col("event_id").as("id"), col("user_id"), col("ts")),
+        profile("click"), profile("purchase"), 3600L * 1000000L, 24)
+      .where(col("kept")).drop("kept").withColumnRenamed("id", "event_id")
+  }
+
+  /** Session artifact of [[eventsDataset]] — TWO registered queries
+    * consume it (ml_dataset hash-gates the frame; ml_poisson_predict
+    * trains/predicts on it), so the ring + window plan runs once per
+    * session. Production analog: the persisted training-dataset table a
+    * pipeline writes once per snapshot.
     */
   private def pooledDataset(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Artifacts.frame(s, dir, Seq("events"), "ml.dataset")(Poisson.buildDataset(s, dir))
+    graft.ops.Artifacts.frame(s, dir, Seq("events"), "ml.dataset")(eventsDataset(s, dir))
 
   /** W1: 24 cyclic hourly lags of the station's avg measure per event,
     * emitted long-form (event_id, i, measure) for the oracle. One query
@@ -42,10 +54,8 @@ object MlQueries {
         |      FROM ring r LEFT JOIN s ON s.user_id = r.user_id AND s.k = r.hh)
         |SELECT event_id, i, $measure FROM j ORDER BY event_id, i""".stripMargin) { (s, dir) =>
       val events = Tables.events(s, dir)
-      val typed = events.where(col("event_type") === eventType)
-      val hourSeries = SeriesAggs.activePeriodAvg(
-        typed, col("user_id"), TimeKeys.hourGroup(col("ts")), TimeKeys.hourKey(col("ts")), "v")
-      val profile = SeriesAggs.stationHourPivot(hourSeries, "v")
+      val profile = SeriesAggs.stationHourProfile(
+        events.where(col("event_type") === eventType), col("user_id"), col("ts"))
       val ring = new HourRingFeatures(s, profile, measure)
       ring.applyLong(events.select(col("event_id"), col("user_id"), col("ts")), "event_id")
         .select(col("event_id"), col("i").cast("long").as("i"), col(measure))
@@ -56,21 +66,22 @@ object MlQueries {
   val hourRingFeaturesReturns: QueryDef =
     hourRing("hour_ring_features_returns", "purchase", "n_returns")
 
-  /** The J2 ML dataset build (ml/Poisson.buildDataset, mirroring
-    * build_dataset.py:63-141), hash-checked long-form: (event_id, label,
-    * i, feature) where i 0..23 = the n_rents ring, 24..47 = the n_returns
-    * ring, label = the A5 forward-window count. This oracles the exact
-    * frame the GLM trains on — a silent feature/label misalignment or a
-    * ring-order regression fails the hash here (the fit itself stays
-    * rows-only by design, SURVEY.md §5.2). Station universe = active in
-    * EITHER measure (joined profile, missing measure zero-filled).
+  /** The ML dataset build ([[Poisson.dataset]], the forecast pipeline's
+    * own, mirroring build_dataset.py:63-141), hash-checked long-form:
+    * (event_id, label, i, feature) where i 0..23 = the n_rents ring,
+    * 24..47 = the n_returns ring, label = the A5 forward-window count.
+    * This oracles the exact frame the GLM trains on — a silent
+    * feature/label misalignment or a ring-order regression fails the hash
+    * here (the fit itself stays rows-only by design, SURVEY.md §5.2).
+    * Station universe = active in BOTH measures (a station missing from
+    * either profile is dropped); a station's inactive hours are 0.
     */
   val mlDataset: QueryDef = QueryDef.sql("ml_dataset",
     s"""WITH c AS (SELECT user_id, event_type, date_trunc('hour', ts) AS g,
       |             CAST(hour(ts) AS BIGINT) AS k, count(*) AS n
       |           FROM events WHERE event_type IN ('click', 'purchase') GROUP BY 1, 2, 3, 4),
       |s AS (SELECT user_id, event_type, k, round(avg(n), 6) AS v FROM c GROUP BY 1, 2, 3),
-      |st AS (SELECT DISTINCT user_id FROM s),
+      |st AS (SELECT user_id FROM s GROUP BY 1 HAVING count(DISTINCT event_type) = 2),
       |lab AS (SELECT event_id, CAST(c AS DOUBLE) AS label FROM (
       |          SELECT event_id, us,
       |            count(*) OVER (PARTITION BY user_id ORDER BY us
@@ -89,7 +100,7 @@ object MlQueries {
       |FROM ring r LEFT JOIN s ON s.user_id = r.user_id AND s.event_type = r.m AND s.k = r.hh
       |ORDER BY r.event_id, r.i""".stripMargin) { (s, dir) =>
     val ds = pooledDataset(s, dir)
-    // single source for ring order: buildDataset's select order (rents
+    // single source for ring order: Poisson.dataset's select order (rents
     // ring 0..23 then returns ring 0..23, Features.scala featureNames)
     val names = ds.columns.filter(_.endsWith("_hb")).toSeq
     ds.select(col("event_id"), col("label"),

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
-import graft.ops.WindowOps
 
 /** ScalaCheck laws for the A5 forward-window core (SURVEY.md §5.2.3):
   * the two-pointer implementation must equal the O(n²) definition on
@@ -28,12 +27,12 @@ object WindowLawsProps extends Properties("A5.forwardCountsCore") {
     }
 
   property("equals O(n^2) definition") = Prop.forAll(genEvents, genWindow) { (es, w) =>
-    WindowOps.forwardCountsCore(es.toArray, w).toMap == brute(es, w)
+    WindowOpsSpec.forwardCountsCore(es.toArray, w).toMap == brute(es, w)
   }
 
   property("emitted ids are exactly those at or before max-w") =
     Prop.forAll(genEvents, genWindow) { (es, w) =>
-      val got = WindowOps.forwardCountsCore(es.toArray, w).map(_._1).toSet
+      val got = WindowOpsSpec.forwardCountsCore(es.toArray, w).map(_._1).toSet
       val want =
         if (es.isEmpty) Set.empty[Long]
         else { val mx = es.map(_._2).max; es.collect { case (id, t) if t <= mx - w => id }.toSet }
@@ -42,6 +41,6 @@ object WindowLawsProps extends Properties("A5.forwardCountsCore") {
 
   property("counts are >= 1 (window includes self)") =
     Prop.forAll(genEvents, genWindow) { (es, w) =>
-      WindowOps.forwardCountsCore(es.toArray, w).forall(_._2 >= 1L)
+      WindowOpsSpec.forwardCountsCore(es.toArray, w).forall(_._2 >= 1L)
     }
 }

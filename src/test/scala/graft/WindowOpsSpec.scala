@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.WindowOps
 
@@ -57,7 +58,7 @@ class WindowOpsSpec extends SparkSpec {
       .withColumn("ts", timestamp_seconds(col("off") + 1700000000L))
     val a = WindowOps.forwardWindowCount(df, "user_id", "ts", "event_id", Hour)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = WindowOps.forwardWindowCountTyped(spark, df, "user_id", "ts", "event_id", Hour)
+    val b = WindowOpsSpec.forwardWindowCountTyped(spark, df, "user_id", "ts", "event_id", Hour)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a === b)
     assert(a.nonEmpty)
@@ -91,5 +92,63 @@ class WindowOpsSpec extends SparkSpec {
     val out = WindowOps.tumblingCount(df, "ts", "1 hour")
       .orderBy("ws").collect().map(r => (r.getTimestamp(0).toString, r.getLong(1)))
     assert(out.toSeq === Seq(("2024-01-01 00:00:00.0", 2L), ("2024-01-01 01:00:00.0", 1L)))
+  }
+}
+
+/** The A5 test oracles: a typed implementation and its pure core. */
+object WindowOpsSpec {
+
+  /** Typed escape hatch for A5 (SURVEY.md §7.4): same semantics via
+    * groupByKey + flatMapGroups — the fallback if a RANGE-frame boundary
+    * mismatch ever surfaced, and the template for per-group imperative
+    * logic Spark expressions can't write. NOTE the scale tradeoff this
+    * makes explicit: the whole group materializes in one task (the
+    * reference's groupByKey hazard), vs the window version's streaming
+    * frame evaluation. A differential test oracle: WindowOpsSpec asserts
+    * its equality with the window version.
+    */
+  def forwardWindowCountTyped(spark: org.apache.spark.sql.SparkSession,
+                              events: DataFrame, partKey: String, tsCol: String,
+                              idCol: String, windowMicros: Long): DataFrame = {
+    import spark.implicits._
+    events
+      // the partition key groups by its STRING form — injective for
+      // numerics and identity for strings, so the fallback really does
+      // accept every key type the primary operator accepts (a long cast
+      // would throw under ANSI on station-name keys, or null-merge them)
+      .select(col(partKey).cast("string"), col(idCol).cast("long"),
+        unix_micros(col(tsCol).cast("timestamp")))
+      .as[(String, Long, Long)]
+      .groupByKey(_._1)
+      .flatMapGroups { (_: String, it: Iterator[(String, Long, Long)]) =>
+        forwardCountsCore(it.map(e => (e._2, e._3)).toArray, windowMicros).iterator
+      }
+      .toDF(idCol, "n_rents")
+  }
+
+  /** Pure single-group A5 core (two-pointer over the ts-sorted events):
+    * (id, count of events with ts in [t, t+w)) for every event with
+    * t <= max(ts) - w. Factored out so WindowLawsProps can law-check it
+    * against the O(n²) definition without a Spark session.
+    */
+  def forwardCountsCore(events: Array[(Long, Long)], windowMicros: Long): Seq[(Long, Long)] = {
+    val es = events.sortBy(_._2)
+    if (es.isEmpty) Seq.empty
+    else {
+      val cutoff = es.last._2 - windowMicros
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      var lo = 0 // first idx with ts >= t (ties before the current row count!)
+      var hi = 0 // first idx with ts >= t + w
+      var idx = 0
+      while (idx < es.length && es(idx)._2 <= cutoff) {
+        val (id, t) = es(idx)
+        while (es(lo)._2 < t) lo += 1
+        if (hi < lo) hi = lo
+        while (hi < es.length && es(hi)._2 < t + windowMicros) hi += 1
+        out += ((id, (hi - lo).toLong))
+        idx += 1
+      }
+      out.toSeq
+    }
   }
 }
