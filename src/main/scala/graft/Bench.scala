@@ -1,7 +1,6 @@
 package graft
 
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
 
 /** Driver bench contract: one JSON line with total + per-query seconds.
   *
@@ -21,37 +20,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = SparkEntry.localCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Janino class cache sized for this suite (r17-opt, measured):
-      // the default 100-entry cache evicts the generated classes of
-      // structurally repeated stages (the ANN hop loops, the replay
-      // classes' per-batch plans, the memo families' shared subtrees)
-      // MID-QUERY across 318 plans, forcing recompiles in the driver
-      // gaps between AQE stages. Both A/B orderings on the knn-graph
-      // family: 41.0-46.1 s -> 34.5-35.4 s. JVM-level and
-      // scale-independent (executors compile the same sources);
-      // overridable via standard -Dspark.* system properties.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.props.getOrElse("spark.sql.codegen.cache.maxEntries", "4096"))
-      // Let AQE plan the fragments that get persisted (r17-opt, guide
-      // §2.3): with the default (false), every session-memo build — the
-      // graph pair/edge tables, dedup signatures, the pooled ML dataset —
-      // runs WITHOUT AQE and caches at the raw shuffle-partition count,
-      // and every downstream scan re-pays those partitions. Enabling is
-      // scale-adaptive by construction (AQE sizes partitions from bytes,
-      // not a constant). Measured on the graph family, both orderings:
-      // 90.25 s @ hf 1.47 -> 64.92 s @ hf 1.62 (pagerank 6.5->3.2, hits
-      // 6.2->3.3, kcore 3.8->1.9); dedup/ml neutral-to-positive.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.props.getOrElse(
-          "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     // absorb one-time session/codegen warm-up outside the measured loop
     loud("session warm-up") {
       spark.read.parquet(s"$sfDir/region.parquet").write
@@ -113,17 +82,13 @@ object Bench {
             org.apache.spark.sql.GraftColumns.expression(col("hs")))).as("sh32"))
         .write.format("noop").mode("overwrite").save()
     }
-    // optional focus filter for local iteration (unset → full suite)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // session artifacts each query hit or built, so a shared build's
     // cost is attributed to the query that paid it. Build seconds include
     // nested builds; a frame persists lazily, so its seconds cover
     // planning and eager steps (checkpoints, counts) and its first
     // materialization lands in the building query's own time
     val artifacts = scala.collection.mutable.LinkedHashMap.empty[String, Seq[graft.ops.Artifacts.Event]]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val results = SparkEntry.selected.map { case (name, fn) =>
       // label every job with its query (guide §1.5) so event logs / the
       // UI attribute time per query — metadata only, no runtime effect
       spark.sparkContext.setJobDescription(s"bench:$name")

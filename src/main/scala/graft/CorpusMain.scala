@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI for the composed LLM-corpus DAG — the product surface a corpus
   * operator actually invokes (the bicis counterpart is Pipeline via
   * PipeBench):
@@ -23,14 +21,7 @@ object CorpusMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: CorpusMain <docs.jsonl> <outDir> [--force] | CorpusMain --append <batch.jsonl> <outDir>")
-    val cpus = SparkEntry.localCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     val t0 = System.nanoTime()
     val pos = args.filterNot(_.startsWith("--"))
     val r =

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit: print `explain("formatted")` for selected queries.
   * Usage: tools/run.sh graft.Explain [queryName ...] (default: key set)
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq

@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-
 /** Reference-scale pipeline throughput: generate ~1M trips (the size of
   * the real 2010-2017 Buenos Aires dataset the reference processes), run
   * the full checkpointed pipeline, print wall seconds per stage-free run.
@@ -22,11 +20,7 @@ object PipeBench {
       i += 1
     }
     w.close()
-    val spark = SparkSession.builder().master(s"local[${SparkEntry.localCpus}]")
-      .config("spark.sql.shuffle.partitions", SparkEntry.localCpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     val t0 = System.nanoTime()
     val r = graft.pipeline.Pipeline.run(spark, Seq(s"$dir/recorridos-realizados-2016.csv"), s"$dir/out")
     val secs = (System.nanoTime() - t0) / 1e9

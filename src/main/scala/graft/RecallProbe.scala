@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ops.Similarity
@@ -38,11 +38,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master(s"local[${SparkEntry.localCpus}]")
-      .config("spark.sql.shuffle.partitions", SparkEntry.localCpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
 
     val vectors = Similarity.vectors(Tables.embeddings(spark, sfDir)).cache()
 

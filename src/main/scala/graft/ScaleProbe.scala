@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dedup scale probe: generates synthetic corpora with planted near-dups
@@ -21,11 +20,7 @@ object ScaleProbe {
     val legsEnv = sys.env.get("SPARK_GRAFT_PROBE_LEGS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def on(l: String): Boolean = legsEnv.forall(_.contains(l))
-    val spark = SparkSession.builder().master(s"local[${SparkEntry.localCpus}]")
-      .config("spark.sql.shuffle.partitions", SparkEntry.localCpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
 
     val vocabSql = (0 until 1000).map(i => s"'w$i'").mkString("array(", ", ", ")")
     sizes.foreach { n =>

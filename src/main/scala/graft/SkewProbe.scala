@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** A5 hot-key probe: generates an event table where ONE station carries a
@@ -20,11 +19,7 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 2000000
     val hotShare = if (args.length > 1) args(1).toDouble else 0.3
-    val spark = SparkSession.builder().master(s"local[${SparkEntry.localCpus}]")
-      .config("spark.sql.shuffle.partitions", SparkEntry.localCpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     val hour = 3600L * 1000000L
 
     // hotShare of events on station 0, the rest uniform over 200 stations;

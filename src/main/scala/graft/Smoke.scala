@@ -1,17 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** t1 smoke: run SparkEntry.entry and print its row count (driver checks >0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     val n = SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows = $n")
     spark.stop()

@@ -109,7 +109,16 @@ object Artifacts {
               (build: => T): T =
     once(s, key(s, dir, tables, kind, params))(Value(build)).v.asInstanceOf[T]
 
-  /** Drop every artifact of `s`: unpersist frames, delete roots. */
+  /** Drop every artifact of `s`: unpersist frames, delete roots.
+    *
+    * Contract for an application that runs several sessions (one
+    * SparkContext, `newSession()` per client): Spark has no session-close
+    * event, so the application-end listener is the only automatic
+    * eviction, and a finished session's artifacts stay persisted and on
+    * disk until the application ends. Such an application must call
+    * `evict` once a session is done with, and not while a query of that
+    * session is still running. A main with one session needs no call.
+    */
   def evict(s: SparkSession): Unit = evictSession(sessionId(s))
 
   /** Run `body` with every hit and build reported to `f` (single

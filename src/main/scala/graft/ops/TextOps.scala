@@ -54,22 +54,21 @@ object TextOps {
     * documents, signatures recomputed per pass). Not DuckDB-reproducible,
     * so oracle-checked queries keep [[portableHash64Sql]]; the dedup
     * operators are hash-agnostic (TextOpsSpec proves identical pair
-    * output under either). A/B via `SPARK_GRAFT_HASH=xxhash64`.
+    * output under either). A/B via `-Dspark.graft.hash=xxhash64`.
     */
   def xxhash64Sql(saltSql: String, valueSql: String): String =
     s"xxhash64(CAST($saltSql AS STRING), $valueSql)"
 
-  /** Session-selected shingle hash tier: `spark.graft.hash` conf (env
-    * `SPARK_GRAFT_HASH` as the fallback, so `graft.Bench` A/Bs the
-    * production tier without code changes) — "xxhash64" picks the
+  /** Session-selected shingle hash tier: the `spark.graft.hash` conf, the
+    * one switch (`-Dspark.graft.hash=xxhash64` A/Bs the production tier
+    * in any main without code changes) — "xxhash64" picks the
     * codegen'd production hash, anything else the DuckDB-checkable
     * portable md5. Oracle runs MUST stay on the default: xxhash64 is not
     * DuckDB-reproducible (pair output is identical — hash-agnostic,
     * TextOpsSpec — but hash-valued columns differ).
     */
   def activeHash(spark: org.apache.spark.sql.SparkSession): HashSql =
-    spark.conf.get("spark.graft.hash",
-        sys.env.getOrElse("SPARK_GRAFT_HASH", "portable")) match {
+    spark.conf.get("spark.graft.hash", "portable") match {
       case "xxhash64" => xxhash64Sql
       case _          => portableHash64Sql
     }

@@ -84,12 +84,9 @@ class PoissonSpec extends SparkSpec {
     val rows = plan.flatMap { case (station, kind, every, n) =>
       (0 until n).map(i => (station, kind, i * every + 7 * station.toInt))
     }.zipWithIndex.map { case ((station, kind, min), i) => (i.toLong + 1, at(min), station, kind) }
-    // one parquet file, which both Spark and DuckDB read as the table
+    // the table as Spark writes it, a directory of part files
     val tmp = java.nio.file.Files.createTempDirectory("ml_dataset").toString
-    rows.toDF("event_id", "ts", "user_id", "event_type").coalesce(1)
-      .write.parquet(s"$tmp/parts")
-    val part = new java.io.File(s"$tmp/parts").listFiles().find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(s"$tmp/events.parquet"))
+    rows.toDF("event_id", "ts", "user_id", "event_type").write.parquet(s"$tmp/events.parquet")
 
     // brute force: a click whose 1 h window is full at its station, at a
     // station with both measures, labeled with the clicks in that window
@@ -105,6 +102,26 @@ class PoissonSpec extends SparkSpec {
     val got = q(spark, tmp).collect()
     assert(got.map(r => r.getLong(0) -> r.getDouble(1)).toMap === fullWindow(Set(1L, 2L)))
     assert(got.length === 48 * fullWindow(Set(1L, 2L)).size)
+
+    // a one-measure hour: station 1 has clicks but no purchases at 04:00,
+    // so every kept station-1 event reads that hour's click average at its
+    // rents ring position and 0 at its returns ring position
+    val (oneStation, oneHour) = (1L, 4)
+    def hourOf(t: java.sql.Timestamp) = t.toInstant.atZone(java.time.ZoneOffset.UTC).getHour
+    def inCell(kind: String) =
+      rows.filter(r => r._3 == oneStation && r._4 == kind && hourOf(r._2) == oneHour)
+    assert(inCell("purchase").isEmpty)
+    val perHour = inCell("click").groupBy(_._2.getTime / 3600000L).values.map(_.size.toDouble)
+    assert(perHour.nonEmpty)
+    val clickAvg = perHour.sum / perHour.size
+    val feature = got.map(r => (r.getLong(0), r.getLong(2)) -> r.getDouble(3)).toMap
+    val kept = clicks.filter(r => r._3 == oneStation && fullWindow(Set(oneStation)).contains(r._1))
+    assert(kept.nonEmpty)
+    kept.foreach { case (id, t, _, _) =>
+      val i = ((hourOf(t) - 1 - oneHour) % 24 + 24) % 24
+      assert(math.abs(feature(id -> i.toLong) - clickAvg) < 1e-6, s"rents ring of event $id")
+      assert(feature(id -> (i + 24).toLong) === 0.0, s"returns ring of event $id")
+    }
 
     // and the oracle SQL agrees on the fixture
     assume(Process(Seq("python3", "-c", "import duckdb")).!(ProcessLogger(_ => ())) == 0,

@@ -29,7 +29,9 @@ def connect(sf_dir):
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+            # a table Spark wrote is a directory of part files
+            src = f"{p}/*.parquet" if os.path.isdir(p) else p
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
     return con
 
 def parse_only(sf_dir, oracle_path):

@@ -11,8 +11,6 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $OPENS \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -XX:ReservedCodeCacheSize=1g \
   -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
